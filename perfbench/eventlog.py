@@ -2,6 +2,8 @@
 
 Only the jobs submitted inside the timed passes' windows count, so the
 warm-up and the output checks never leak into the per-layer figures.
+Python-worker start-up is the exception: workers start during the
+warm-up and are reused, so it is summed over the whole session.
 Python-worker figures come from the SQL metrics of every plan node
 that reports them (MapInArrow / MapInPandas in this program); their
 accumulator ids are taken from the plan infos, their values from the
