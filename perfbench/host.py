@@ -1,4 +1,4 @@
-"""Session host: one SparkSession in its own process, driven over a pipe.
+"""Session host: one SparkSession in its own process, driven over a socket.
 
 Spark fixes the core count when a session starts, so 1-core and
 4-core passes that alternate within one run need two sessions, and
@@ -8,9 +8,11 @@ hosts and sends each the same small set of commands.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import signal
+import sys
 import time
 import traceback
 
@@ -26,7 +28,7 @@ def _proc_status(pid: int) -> dict[str, str]:
     return out
 
 
-def _descendants(root: int) -> list[int]:
+def descendants(root: int) -> list[int]:
     children: dict[int, list[int]] = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -68,7 +70,7 @@ def stop_session(spark) -> dict:
     from pyspark import SparkContext  # noqa: PLC0415
 
     jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
-    workers = _descendants(jvm)
+    workers = descendants(jvm)
     res = {
         "jvm_peak_rss_mb": _hwm_mb(jvm),
         "worker_peak_rss_mb": max((_hwm_mb(p) for p in workers), default=0.0),
@@ -115,9 +117,6 @@ def session_conf(root: str, name: str, event_log: bool) -> dict:
 
 def serve(conn, cfg: dict) -> None:
     """Host main loop. ``cfg``: name, cores, traced, workload, seed, root."""
-    # The JVM and its Python workers inherit this process's stdout; send
-    # it to stderr so only the orchestrator writes the result stream.
-    os.dup2(2, 1)
     try:
         _serve(conn, cfg)
     except Exception:  # report to the orchestrator, which fails the run
@@ -194,3 +193,10 @@ def _serve(conn, cfg: dict) -> None:
             return
         else:
             raise ValueError(f"unknown op {op!r}")
+
+
+if __name__ == "__main__":
+    # host.py FD CFG_JSON: serve over the socket FD inherited from run.py
+    from multiprocessing.connection import Connection
+
+    serve(Connection(int(sys.argv[1])), json.loads(sys.argv[2]))

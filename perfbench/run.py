@@ -26,17 +26,23 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import ctypes  # noqa: E402
 import json  # noqa: E402
-import multiprocessing  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
+import socket  # noqa: E402
 import statistics  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
+from multiprocessing.connection import Connection  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 CHECKOUT = os.path.dirname(HERE)
 TMP_BASE = os.path.join(CHECKOUT, ".perfbench_tmp")
-DEADLINE_S = 150.0  # replies after this fail the run; closing the hosts takes < 30 s more
+DEADLINE_S = 150.0  # replies after this fail the run; stopping every process takes < 25 s more
+STOP_GRACE_S = 15.0  # how long processes left at the end may take to exit before they are killed
+PR_SET_CHILD_SUBREAPER = 36
 WORKLOAD_NAMES = ("crawl_extract", "warc_events")
 
 END_TO_END = {
@@ -85,13 +91,17 @@ class HostError(RuntimeError):
 class Host:
     """Orchestrator-side handle of one session host process."""
 
-    def __init__(self, ctx, cfg: dict):
-        import host  # noqa: PLC0415
-
+    def __init__(self, cfg: dict):
         self.name = cfg["name"]
-        self.conn, child = ctx.Pipe()
-        self.proc = ctx.Process(target=host.serve, args=(child, cfg), name=f"host-{self.name}")
-        self.proc.start()
+        parent, child = socket.socketpair()
+        self.conn = Connection(parent.detach())
+        # The host, its JVM and its Python workers write to stderr, so
+        # only the orchestrator writes the result stream.
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.join(HERE, "host.py"), str(child.fileno()), json.dumps(cfg)],
+            pass_fds=(child.fileno(),),
+            stdout=sys.stderr.fileno(),
+        )
         child.close()
 
     def send(self, op: str) -> None:
@@ -112,14 +122,43 @@ class Host:
 
     def close(self) -> None:
         # An idle host exits when its pipe closes; its JVM exits with it.
+        # stop_descendants waits for both and kills them if they do not.
         self.conn.close()
-        self.proc.join(timeout=10)
-        if self.proc.is_alive():
-            self.proc.terminate()
-            self.proc.join(timeout=5)
-        if self.proc.is_alive():
-            self.proc.kill()
-            self.proc.join()
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of everything it starts: a JVM or
+    Python worker whose parent has died is re-parented here rather than
+    to init, so stop_descendants still finds and reaps it."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def stop_descendants(grace_s: float) -> None:
+    """Give every process below this one ``grace_s`` to exit, SIGKILL
+    what is left, and reap them all; return when none is left, or 10 s
+    after the kill."""
+    from host import descendants  # noqa: PLC0415
+
+    kill_at = time.monotonic() + grace_s
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            pass  # no child left to reap
+        left = descendants(os.getpid())
+        now = time.monotonic()
+        if not left or now > kill_at + 10:
+            return
+        if now >= kill_at:
+            for pid in left:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass  # ended after the scan
+        time.sleep(0.05)
 
 
 def _rate(passes: list[dict]) -> float:
@@ -203,13 +242,12 @@ def run(args, run_root: str) -> tuple[dict, dict]:
         roles = [("a", 4, True), ("b", 4, False)]
     else:
         roles = [("a", 4, False), ("b", 1, False)]
-    ctx = multiprocessing.get_context("spawn")
     hosts: list[Host] = []
 
     def spawn(name: str, cores: int, traced: bool) -> Host:
         cfg = {"name": name, "cores": cores, "traced": traced, "workload": args.workload,
                "seed": args.seed, "root": run_root}
-        hosts.append(Host(ctx, cfg))
+        hosts.append(Host(cfg))
         return hosts[-1]
 
     try:
@@ -293,9 +331,13 @@ def main() -> int:
     os.environ["TMPDIR"] = run_root
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_root, "local")
     os.environ["PYTHONPATH"] = os.pathsep.join([CHECKOUT, HERE])
+    # a SIGTERM ends the run through the cleanup below, like an error does
+    signal.signal(signal.SIGTERM, lambda signum, _: sys.exit(128 + signum))
+    adopt_orphans()
     try:
         detail, result = run(args, run_root)
     finally:
+        stop_descendants(STOP_GRACE_S)
         shutil.rmtree(run_root, ignore_errors=True)
         try:
             os.rmdir(TMP_BASE)
