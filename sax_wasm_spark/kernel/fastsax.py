@@ -92,6 +92,32 @@ S_CLOSE_TAG = 21
 S_JSX = 22
 S_SKIP_WS = 23
 
+# Record layouts. Tag record (the current tag ``tg``, stack entries
+# ``tags[i]``, ``e``, ``e2``):
+#   [h0, h1, name|None, os_l, os_c, oe_l, oe_c, cs_l, cs_c, b0, b1]
+# Attribute record (``at``):
+#   [ns_l, ns_c, ne_l, ne_c, nh0, nh1, vs_l, vs_c, ve_l, ve_c, vh0, vh1,
+#    atype, b0]
+#
+# Position state: the locals, record slots and helpers below carry only
+# line/UTF-16-column positions, which reach the output only through the
+# row's position fields. fastsax_np derives the positions-off kernel
+# from parse_doc, _tuof, _tu and _skipws by deleting every store to this
+# state and emitting 0 in those fields, so position code added here must
+# use (or extend) these names; the derivation raises at import on a
+# statement that mixes position and byte state.
+POS_LOCALS = frozenset({
+    "line", "ch", "ll", "lc", "nl", "line2", "ch2", "fl_ch", "fll", "flc",
+    "tx_sl", "tx_sc", "md_sl", "md_sc", "me_sl", "me_sc", "me_el", "me_ec",
+    "pi_sl", "pi_sc", "pi_t_el", "pi_t_ec", "pi_c_sl", "pi_c_sc",
+    "e_ce_l", "e_ce_c", "ce_l", "ce_c", "cs_l", "cs_c",
+})
+TAG_POS_SLOTS = frozenset(range(3, 9))
+ATTR_POS_SLOTS = frozenset({0, 1, 2, 3, 6, 7, 8, 9})
+POS_RECORDS = {"tg": TAG_POS_SLOTS, "e": TAG_POS_SLOTS, "e2": TAG_POS_SLOTS, "at": ATTR_POS_SLOTS}
+ROW_POS_FIELDS = range(10, 18)  # collect.FIELD_NAMES line_start..close_start_char
+POS_FUNCS = frozenset({"_advr", "_cc"})
+
 
 def _cc(span: bytes) -> int:
     """UTF-16 column width of a valid-UTF-8 span."""
@@ -293,13 +319,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
     tx_h1 = 0
     tx_b0 = 0
 
-    # stack entries / current tag:
-    # [h0, h1, name|None, os_l, os_c, oe_l, oe_c, cs_l, cs_c, b0, b1]
+    # tag stack, current tag and current attribute (layouts above)
     tags: list[list] = []
     tg = [0, 0, None, 0, 0, 0, 0, 0, 0, 0, 0]
-
-    # attribute: [ns_l, ns_c, ne_l, ne_c, nh0, nh1,
-    #             vs_l, vs_c, ve_l, ve_c, vh0, vh1, atype, b0]
     at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 
     # close-tag capture
@@ -466,9 +488,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     state = S_OPEN_TAG
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            if fl_off > tx_h0:  # _mat's common case, inlined
+                                val, ok = tx_val + buf[tx_h0:fl_off], True
+                            else:
+                                val, ok = _mat(tx_val, buf, tx_h0, fl_off)
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
                                         None, None, tx_sl, tx_sc, line, fl_ch, None,
                                         None, None, None, tx_b0, fl_off))
@@ -494,9 +519,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     # further grapheme is consumed).
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            if fl_off > tx_h0:  # _mat's common case, inlined
+                                val, ok = tx_val + buf[tx_h0:fl_off], True
+                            else:
+                                val, ok = _mat(tx_val, buf, tx_h0, fl_off)
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
                                         None, None, tx_sl, tx_sc, line, fl_ch, None, None,
                                         None, None, tx_b0, fl_off))
@@ -561,9 +589,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     # handler for the grapheme after '/'
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            if fl_off > tx_h0:  # _mat's common case, inlined
+                                val, ok = tx_val + buf[tx_h0:fl_off], True
+                            else:
+                                val, ok = _mat(tx_val, buf, tx_h0, fl_off)
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
                                         None, None, tx_sl, tx_sc, line, fl_ch, None, None,
                                         None, None, tx_b0, fl_off))
@@ -596,9 +627,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 elif b0 == 0x3E:  # '>' : JSX fragment
                     if tx_on:
                         tx_on = False
-                        if not (tx_h0 == fl_off and not tx_val):
-                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                            if ev_text and ok:
+                        if ev_text and not (tx_h0 == fl_off and not tx_val):
+                            if fl_off > tx_h0:  # _mat's common case, inlined
+                                val, ok = tx_val + buf[tx_h0:fl_off], True
+                            else:
+                                val, ok = _mat(tx_val, buf, tx_h0, fl_off)
+                            if ok:
                                 append((0, seq, None, val, None, None, None, None,
                                         None, None, tx_sl, tx_sc, line, fl_ch, None,
                                         None, None, None, tx_b0, fl_off))
@@ -633,9 +667,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                 # '!', '/', '?' arms flush pending text at the end
                 if tx_on:
                     tx_on = False
-                    if not (tx_h0 == fl_off and not tx_val):
-                        val, ok = _mat(tx_val, buf, tx_h0, fl_off)
-                        if ev_text and ok:
+                    if ev_text and not (tx_h0 == fl_off and not tx_val):
+                        if fl_off > tx_h0:  # _mat's common case, inlined
+                            val, ok = tx_val + buf[tx_h0:fl_off], True
+                        else:
+                            val, ok = _mat(tx_val, buf, tx_h0, fl_off)
+                        if ok:
                             append((0, seq, None, val, None, None, None, None,
                                     None, None, tx_sl, tx_sc, line, fl_ch, None, None,
                                     None, None, tx_b0, fl_off))
@@ -710,29 +747,41 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
             if st == S_CLOSE_TAG:
                 byte = b0
                 if byte != 0x3E:
-                    offset = 0
-                    start = lcp
-                    k, cursor2, line2, ch2, lcp2, lastb, found = _tuof(buf, n, asc, RE_CLOSE_END, b"> ", cursor, line, ch, True
-                    )
-                    if k != 0:
-                        byte = lastb
-                        offset = 1 if found else 0
-                        if k == 2:
-                            ll, lc = line, ch
-                            cursor, line, ch, lcp = cursor2, line2, ch2, lcp2
-                    cl_h0 = start
-                    cl_h1 = cursor - offset
+                    # _tuof(RE_CLOSE_END, b"> ", include=True), inlined:
+                    # nothing to take at EOF, and the precheck hits iff
+                    # the grapheme is ' ' ('>' is handled below)
+                    cl_h0 = lcp
+                    if cursor == n:
+                        cl_h1 = cursor
+                    elif byte == 0x20:
+                        cl_h1 = cursor - 1
+                    else:
+                        ll = line
+                        lc = ch
+                        m = RE_CLOSE_END.search(buf, cursor)
+                        pos = m.start() if m is not None else n
+                        line, ch = _advr(buf, asc, cursor, pos, line, ch)
+                        if m is not None:
+                            ch += 1  # the '>' or ' ' taken
+                            byte = buf[pos]
+                            lcp = pos
+                            cursor = pos + 1
+                        else:
+                            byte = buf[n - 1]
+                            lcp = n - _last_gl(buf, n)
+                            cursor = n
+                        cl_h1 = pos
                 if byte == 0x3E:
                     # ---- process_close_tag ----
                     state = S_BEGIN_WS
-                    close_name, _ok = _mat(b"", buf, cl_h0, cl_h1)
+                    if cl_h1 > cl_h0:  # _mat's common case, inlined
+                        close_name = buf[cl_h0:cl_h1]
+                    else:
+                        close_name, _ok = _mat(b"", buf, cl_h0, cl_h1)
                     cl_h0 = cl_h1 = 0
                     found_i = -1
                     for i in range(len(tags) - 1, -1, -1):
                         if _name_of(buf, tags[i]) == close_name:
-                            e = tags[i]
-                            e[7] = tg[7]
-                            e[8] = tg[8]
                             found_i = i
                             break
                     if found_i < 0:
@@ -756,7 +805,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                                 seq += 1
                         break
                     e = tags[found_i]
-                    # close_end + byte_range.1 on the matched tag
+                    # close_start, close_end + byte_range.1 on the matched tag
+                    e[7] = tg[7]
+                    e[8] = tg[8]
                     e_ce_l, e_ce_c = line, ch
                     e[10] = cursor
                     if not ev_ct:
@@ -806,9 +857,12 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                         # newline flushes text at (fll, flc, fpos)
                         if tx_on:
                             tx_on = False
-                            if not (tx_h0 == fpos and not tx_val):
-                                val, ok = _mat(tx_val, buf, tx_h0, fpos)
-                                if ev_text and ok:
+                            if ev_text and not (tx_h0 == fpos and not tx_val):
+                                if fpos > tx_h0:  # _mat's common case, inlined
+                                    val, ok = tx_val + buf[tx_h0:fpos], True
+                                else:
+                                    val, ok = _mat(tx_val, buf, tx_h0, fpos)
+                                if ok:
                                     append((0, seq, None, val, None, None, None, None,
                                             None, None, tx_sl, tx_sc, fll, flc, None, None,
                                             None, None, tx_b0, fpos))
@@ -1016,15 +1070,16 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                             at[11] = h1 - 1 if h1 >= 1 else 0
                         else:
                             at[11] = h1
-                        nval, nok = _mat(b"", buf, at[4], at[5])
-                        vval, vok = _mat(b"", buf, at[10], at[11])
-                        if ev_attr and (nok or vok):
-                            append((6, seq, None, None, nval,
-                                    vval, at[12], None, None, None,
-                                    at[0], at[1], at[8], at[9],
-                                    at[2], at[3], at[6], at[7],
-                                    at[13], cursor))
-                            seq += 1
+                        if ev_attr:
+                            nval, nok = _mat(b"", buf, at[4], at[5])
+                            vval, vok = _mat(b"", buf, at[10], at[11])
+                            if nok or vok:
+                                append((6, seq, None, None, nval,
+                                        vval, at[12], None, None, None,
+                                        at[0], at[1], at[8], at[9],
+                                        at[2], at[3], at[6], at[7],
+                                        at[13], cursor))
+                                seq += 1
                         at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                         quote = 0
                         state = S_ATTRIB_VAL_CLOSED
@@ -1183,13 +1238,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     # note: name.h1 left as-is (mirrors FSM: header.1 not
                     # set on this path → hydrate uses stale h1)
                     # process_attribute then process_open_tag
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
-                        seq += 1
+                    if ev_attr:
+                        nval, nok = _mat(b"", buf, at[4], at[5])
+                        vval, vok = _mat(b"", buf, at[10], at[11])
+                        if nok or vok:
+                            append((6, seq, None, None, nval, vval, at[12], None,
+                                    None, None, at[0], at[1], at[8], at[9], at[2], at[3],
+                                    at[6], at[7], at[13], cursor))
+                            seq += 1
                     at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                     tg[5] = line
                     tg[6] = ch
@@ -1232,13 +1288,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     break
                 if b0 != 0x3D:
                     # process_attribute (bare attribute)
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
-                        seq += 1
+                    if ev_attr:
+                        nval, nok = _mat(b"", buf, at[4], at[5])
+                        vval, vok = _mat(b"", buf, at[10], at[11])
+                        if nok or vok:
+                            append((6, seq, None, None, nval, vval, at[12], None,
+                                    None, None, at[0], at[1], at[8], at[9], at[2], at[3],
+                                    at[6], at[7], at[13], cursor))
+                            seq += 1
                     at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                 if b0 == 0x3D:
                     state = S_ATTRIB_VAL
@@ -1313,13 +1370,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     else:
                         at[11] = h1
                     # process_attribute
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
-                        seq += 1
+                    if ev_attr:
+                        nval, nok = _mat(b"", buf, at[4], at[5])
+                        vval, vok = _mat(b"", buf, at[10], at[11])
+                        if nok or vok:
+                            append((6, seq, None, None, nval, vval, at[12], None,
+                                    None, None, at[0], at[1], at[8], at[9], at[2], at[3],
+                                    at[6], at[7], at[13], cursor))
+                            seq += 1
                     at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                     quote = 0
                     state = S_ATTRIB_VAL_CLOSED
@@ -1385,13 +1443,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     if not attr_end and b0 != byte:
                         break
                 # process_attribute
-                nval, nok = _mat(b"", buf, at[4], at[5])
-                vval, vok = _mat(b"", buf, at[10], at[11])
-                if ev_attr and (nok or vok):
-                    append((6, seq, None, None, nval, vval, at[12], None,
-                            None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                            at[6], at[7], at[13], cursor))
-                    seq += 1
+                if ev_attr:
+                    nval, nok = _mat(b"", buf, at[4], at[5])
+                    vval, vok = _mat(b"", buf, at[10], at[11])
+                    if nok or vok:
+                        append((6, seq, None, None, nval, vval, at[12], None,
+                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
+                                at[6], at[7], at[13], cursor))
+                        seq += 1
                 at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                 if byte == 0x2F:
                     state = S_OPEN_SLASH
@@ -1727,13 +1786,14 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
                     at[8] = line
                     at[9] = ch - 1 if ch >= 1 else 0
                     at[11] = lcp
-                    nval, nok = _mat(b"", buf, at[4], at[5])
-                    vval, vok = _mat(b"", buf, at[10], at[11])
-                    if ev_attr and (nok or vok):
-                        append((6, seq, None, None, nval, vval, at[12], None,
-                                None, None, at[0], at[1], at[8], at[9], at[2], at[3],
-                                at[6], at[7], at[13], cursor))
-                        seq += 1
+                    if ev_attr:
+                        nval, nok = _mat(b"", buf, at[4], at[5])
+                        vval, vok = _mat(b"", buf, at[10], at[11])
+                        if nok or vok:
+                            append((6, seq, None, None, nval, vval, at[12], None,
+                                    None, None, at[0], at[1], at[8], at[9], at[2], at[3],
+                                    at[6], at[7], at[13], cursor))
+                            seq += 1
                     at = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
                     state = S_ATTRIB_VAL_CLOSED
                     break
@@ -1754,9 +1814,9 @@ def parse_doc(data: bytes, events: int):  # noqa: C901, PLR0912, PLR0915
     # EOF: identity() flush — chunk_offset is now len(data)
     if tx_on:
         # end-of-write hydrate materializes the streamed span first
-        val, _ok = _mat(tx_val, buf, tx_h0, tx_h1)
-        if val:
-            if ev_text:
+        if ev_text:
+            val, _ok = _mat(tx_val, buf, tx_h0, tx_h1)
+            if val:
                 rows.append((0, seq, None, val, None, None, None, None, None,
                              None, tx_sl, tx_sc, line, ch, None, None, None, None,
                              tx_b0, n))

@@ -719,75 +719,6 @@ VIDEO_STATS_SCHEMA_TAIL = [
 ]
 
 
-def decode_video_stats(
-    df: DataFrame,
-    media_col: str = "avi",
-    id_cols: tuple[str, ...] = ("doc_id", "img_idx"),
-    max_pixels: int = 1 << 22,
-    max_frames: int = 1 << 10,
-) -> DataFrame:
-    """REAL video decode over a binary AVI column → per-clip facts and
-    pixel statistics spanning EVERY frame: (id…, n_frames, width,
-    height, duration_ms, pixel_sum, pixel_min, pixel_max, status).
-    Uncompressed BI_RGB is lossless so deterministic corpora oracle
-    bit-exactly (q77); compressed/malformed payloads degrade to
-    ``status='error:…'`` rows with NULL stats — the straggler/poison
-    budget, same policy as the image tier. Per-row CPU inside Arrow
-    batches, zero shuffle; ``max_pixels``/``max_frames`` bound hostile
-    claims before allocation."""
-    import numpy as np  # noqa: PLC0415
-
-    from ..kernel.avicodec import AviError, decode_avi  # noqa: PLC0415
-
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + VIDEO_STATS_SCHEMA_TAIL)
-
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            media_list = pdf[media_col].tolist()
-            for row in range(len(media_list)):
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                data = media_list[row]
-                if data is None:
-                    data = b""
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    clip = decode_avi(
-                        data, max_pixels=max_pixels, max_frames=max_frames
-                    )
-                    s = mn = mx = None
-                    for fr in clip.frames:  # stats span ALL frames
-                        px = fr  # r8: exact without the int64 copy
-                        s = (s or 0) + int(px.sum(dtype=np.int64))
-                        fmn, fmx = int(px.min()), int(px.max())
-                        mn = fmn if mn is None else min(mn, fmn)
-                        mx = fmx if mx is None else max(mx, fmx)
-                    out["n_frames"].append(clip.n_frames)
-                    out["width"].append(clip.width)
-                    out["height"].append(clip.height)
-                    out["duration_ms"].append(clip.duration_ms)
-                    out["pixel_sum"].append(s)
-                    out["pixel_min"].append(mn)
-                    out["pixel_max"].append(mx)
-                    out["status"].append("ok")
-                except AviError as e:
-                    for col in (
-                        "n_frames", "width", "height", "duration_ms",
-                        "pixel_sum", "pixel_min", "pixel_max",
-                    ):
-                        out[col].append(None)
-                    out["status"].append(f"error:{e}")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def render_decode_video_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -795,16 +726,18 @@ def render_decode_video_stats(
     max_pixels: int = 1 << 22,
     max_frames: int = 1 << 10,
 ) -> DataFrame:
-    """Fused ``render_avi_column`` ∘ ``decode_video_stats`` (optimization
-    r8, guide §2.3/§8: don't round-trip heavy bytes through the JVM when
-    the decision needs only their stats). Row-for-row identical to the
-    two-stage composition — every clip is still fully ENCODED by the
-    writer twin and DECODED back through the real codec inside the same
-    Python worker — but the multi-KB AVI payloads never cross the
-    Arrow boundary: only (id, img_idx) in and the fixed-width stats
-    out. The un-fused operators remain the production pipeline surface
-    (real corpora arrive as stored bytes); this is the roundtrip-bench
-    shape."""
+    """Per-clip video facts and pixel statistics over rendered AVIs:
+    (id, img_idx, n_frames, width, height, duration_ms, pixel_sum,
+    pixel_min, pixel_max, status), with the stats spanning EVERY frame.
+    Each clip is fully ENCODED by the writer twin (``render_avi_column``'s
+    ``build_avi``) and DECODED back through the real codec inside the
+    same Python worker, so the multi-KB AVI payloads never cross the
+    Arrow boundary: only (id, n) in and the fixed-width stats out
+    (optimization r8, guide §2.3/§8). Uncompressed BI_RGB is lossless,
+    so deterministic corpora oracle bit-exactly (q77); a malformed clip
+    degrades to a ``status='error:…'`` row with NULL stats, and
+    ``max_pixels``/``max_frames`` bound hostile claims before
+    allocation."""
     import numpy as np  # noqa: PLC0415
 
     from ..kernel.avicodec import AviError, decode_avi  # noqa: PLC0415

@@ -10,14 +10,20 @@ against the FSM (test_fastsax.py), which is gated against the
 reference WASM (tools/diff_ref.py), so equality here chains all the
 way to the reference."""
 
+import os
 import random
 import sys
+import types
+
+import pytest
 
 sys.path.insert(0, "/root/repo/tools")
 
+from sax_wasm_spark.kernel import fastsax, fastsax_np
 from sax_wasm_spark.kernel.fastsax import parse_doc
-from sax_wasm_spark.kernel.fastsax_np import parse_doc_flat_np, parse_doc_np
+from sax_wasm_spark.kernel.fastsax_np import _derive_function, parse_doc_flat_np, parse_doc_np
 from sax_wasm_spark.sources.pages import build_page
+from tools.bench_kernel import FIXTURE as REF_FIXTURE
 
 POS_SLOTS = range(10, 18)
 
@@ -73,8 +79,9 @@ def test_pages_corpus_np_equivalence():
             check(html, m)
 
 
+@pytest.mark.skipif(not os.path.exists(REF_FIXTURE), reason="reference fixture not available")
 def test_reference_fixture_np_equivalence():
-    with open("/root/reference/src/js/__test__/xml.xml", "rb") as f:
+    with open(REF_FIXTURE, "rb") as f:
         data = f.read()
     for m in (0x3FF, 0x141, 0x381):
         check(data, m)
@@ -86,3 +93,66 @@ def test_np_flat_falls_back_on_invalid_utf8():
     doc = b"<div>\xff\xfe broken</div>"
     assert parse_doc_np(doc, 0x3FF) is None
     assert parse_doc_flat_np(doc, 0x3FF) == parse_doc_flat(doc, 0x3FF)
+
+
+def _code_names(fn) -> set:
+    """Every name a function's code, nested code included, refers to."""
+    names, todo = set(), [fn.__code__]
+    while todo:
+        co = todo.pop()
+        names.update(co.co_names, co.co_varnames, co.co_cellvars, co.co_freevars)
+        todo.extend(c for c in co.co_consts if isinstance(c, types.CodeType))
+    return names
+
+
+def test_derived_kernel_does_no_position_work():
+    # The differential tests above cannot see leftover position work:
+    # its output is zeroed either way. So look at the code itself.
+    position = fastsax.POS_LOCALS | {"line", "ch", "ll", "lc", "_advr", "_cc"}
+    assert {"line", "ch", "_advr"} <= _code_names(parse_doc)
+    for fn in (
+        fastsax_np.parse_doc_np,
+        fastsax_np._tuof_np,
+        fastsax_np._tu_np,
+        fastsax_np._skipws_np,
+    ):
+        assert not _code_names(fn) & position, fn.__name__
+
+
+def _position_bookkeeping(buf, cursor, line, ch):
+    nl = buf.count(b"\n", 0, cursor)
+    if nl:
+        line += nl
+    cursor += 1
+    return (cursor, line, ch)
+
+
+def _byte_from_position(buf, cursor, line, ch):
+    cursor += line
+    return (cursor, line, ch)
+
+
+def _branch_on_position(buf, cursor, line, ch):
+    if ch > 80:
+        cursor += 1
+    return (cursor, line, ch)
+
+
+def _position_store_with_side_effect(buf, cursor, line, ch):
+    line = len(buf.split(b"\n"))
+    return (cursor, line, ch)
+
+
+def test_derivation_strips_position_bookkeeping():
+    twins = {}
+    fn = _derive_function(_position_bookkeeping, twins, helper=True)
+    assert [a.arg for a in fn.args.args] == ["cursor"]
+    assert twins["_position_bookkeeping"][1:] == ([0, 2, 3], 3, {1, 2})
+
+
+@pytest.mark.parametrize(
+    "func", [_byte_from_position, _branch_on_position, _position_store_with_side_effect]
+)
+def test_derivation_rejects_mixed_position_and_byte_state(func):
+    with pytest.raises(ValueError, match="cannot derive"):
+        _derive_function(func, {}, helper=True)

@@ -7,6 +7,10 @@ fixture, so host-load noise hits all three alike. Per-engine best-of-
 rounds is the capacity estimate (noise on a shared VM is strictly
 subtractive). Prints ONE JSON line.
 
+Without the reference (its fixture or node absent) the reference and
+fixture legs are skipped and ``reference`` says so; the web-pages and
+PDF legs run either way.
+
 Usage: python tools/bench_kernel.py [rounds]
 
 Masks: 0x141 (Text|Attribute|CloseTag — the extraction-like mask used
@@ -17,11 +21,14 @@ extractor's actual mask).
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
 
 FIXTURE = "/root/reference/src/js/__test__/xml.xml"
 MASKS = (0x141, 0x381)
@@ -35,7 +42,7 @@ def time_py(fn, data, mask):
 
 def ref_ms(mask, runs=1):
     out = subprocess.run(
-        ["node", "/root/repo/tools/ref_bench.mjs", str(mask), str(runs)],
+        ["node", os.path.join(TOOLS, "ref_bench.mjs"), str(mask), str(runs)],
         capture_output=True,
         text=True,
         check=True,
@@ -43,11 +50,8 @@ def ref_ms(mask, runs=1):
     return min(json.loads(out.stdout)["runs_ms"])
 
 
-def main():
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 4
-    from sax_wasm_spark.kernel.fastsax import parse_doc
-    from sax_wasm_spark.kernel.fastsax_np import parse_doc_np
-
+def reference_leg(rounds: int, parse_doc, parse_doc_np) -> dict:
+    """Reference WASM vs both kernels on the reference's own fixture."""
     with open(FIXTURE, "rb") as f:
         data = f.read()
     mb = len(data) / 1e6
@@ -57,7 +61,7 @@ def main():
     parse_doc_np(data, MASKS[0])
     ref_ms(MASKS[0], 1)
 
-    result = {"fixture_bytes": len(data), "rounds": rounds, "masks": {}}
+    result = {"fixture_bytes": len(data), "masks": {}}
     for mask in MASKS:
         best = {"ref": 9e9, "pos": 9e9, "np": 9e9}
         for _ in range(rounds):
@@ -73,6 +77,19 @@ def main():
             "np_mb_s": round(mb / best["np"] * 1000, 2),
             "np_vs_ref": round(best["ref"] / best["np"], 3),
         }
+    return result
+
+
+def main():
+    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 4
+    from sax_wasm_spark.kernel.fastsax import parse_doc
+    from sax_wasm_spark.kernel.fastsax_np import parse_doc_np
+
+    result = {"rounds": rounds}
+    if os.path.exists(FIXTURE) and shutil.which("node"):
+        result.update(reference_leg(rounds, parse_doc, parse_doc_np))
+    else:
+        result["reference"] = "skipped: reference fixture or node not available"
 
     # realistic web-pages corpus: single-core docs/s of the full
     # extract (tokenize + classify) and of both raw parses
