@@ -98,6 +98,11 @@ MAX_LINK_DENSITY = 0.5
 MIN_TEXT_DENSITY = 10  # bytes of text per tag within the block
 DENSITY_EXEMPT_BYTES = 80
 
+# rows per output batch of extract_main_content: a task reads whole scan
+# splits, so turning at most this many rows into Python objects at a
+# time keeps worker memory flat however many rows a batch carries
+SLICE_ROWS = 128
+
 EXTRACT_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -248,7 +253,8 @@ def extract_main_content(
 
     Output batches are pyarrow RecordBatches built directly from the
     column lists (``mapInArrow``) — no pandas intermediate, no object-
-    dtype inference on the nested spans column per batch.
+    dtype inference on the nested spans column per batch — one per
+    ``SLICE_ROWS``-row slice of each incoming batch.
     ``passthrough`` columns are copied onto the output row-aligned
     (exactly one output row per page) — e.g. the raw-html hash the
     incremental refresh keys on (plans/lineage.run_extraction stores it
@@ -275,7 +281,12 @@ def extract_main_content(
     n_extract_fields = len(EXTRACT_SCHEMA.fields)
 
     def run(batches):
-        for rb in batches:
+        slices = (
+            batch.slice(off, SLICE_ROWS)
+            for batch in batches
+            for off in range(0, batch.num_rows, SLICE_ROWS)
+        )
+        for rb in slices:
             urls = rb.column(0).to_pylist()
             htmls = rb.column(1).to_pylist()
             # passthrough columns are row-aligned with the input batch:

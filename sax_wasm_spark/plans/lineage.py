@@ -16,18 +16,34 @@ Design (SURVEY.md §2.4 checkpoint row):
   anti-joined away (broadcast — the lineage table is tiny) and only the
   remainder is processed.
 
+Stage layout (``extract_shards``, shared by both writers): the
+extractor runs inside the stage that produces its input, and only its
+output is shuffled by shard for the write. In ``run_extraction`` that
+is the scan stage (pages scan + broadcast anti-join), so a pass runs
+exactly one Python stage, whose task count follows the input splits
+(which Spark sizes by bytes, ``spark.sql.files.maxPartitionBytes``),
+not ``num_shards``. Each Python task pays a fixed start cost before its
+first row (0.1-0.5 s measured on a 4-core VM, against ~0.6 ms of
+kernel time per page), so a fixed-count shuffle in front of the
+extractor would let that cost, not the kernel, set the pass time. The
+lineage frames (the empty ``completed_shards`` frame and the appended
+lineage rows) are built on the JVM (``Range`` and ``LocalTableScan``),
+so they start no Python task either.
+
 At 10^12 documents the same layout holds: shards are the retry ledger
 (thousands of rows), not the data; the anti-join is a broadcast hash
 join against the pages scan, and the extract stage is embarrassingly
-parallel within each shard.
+parallel over the scan splits.
 """
 
 from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -64,7 +80,11 @@ def completed_shards(spark: SparkSession, lineage_path: str) -> DataFrame:
     try:
         lin = spark.read.parquet(lineage_path)
     except Exception:
-        return spark.createDataFrame([], "shard int")
+        # a JVM Range, not a frame from a Python list: this frame is
+        # evaluated up to three times per pass (count, the write's and
+        # the read-back's anti-join), and a list-backed one runs a
+        # Python task each time
+        return spark.range(0).select(F.col("id").cast("int").alias("shard"))
     return lin.where(F.col("status") == "ok").select("shard").distinct()
 
 
@@ -154,10 +174,41 @@ def _append_lineage(
     )
     rows = stats.collect()
     if rows:
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(lineage_path)
+        lineage_rows(spark, rows).coalesce(1).write.mode("append").parquet(
+            lineage_path
+        )
     return rows
+
+
+def lineage_rows(spark: SparkSession, rows: list) -> DataFrame:
+    """The collected per-shard rows as a frame that plans as a JVM
+    ``LocalTableScan`` (built from an Arrow table), not as a Python
+    list's ``Scan ExistingRDD``, which would run a Python task."""
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA)
+    )
+    return spark.createDataFrame(table, LINEAGE_SCHEMA)
+
+
+def extract_shards(todo: DataFrame, num_shards: int) -> DataFrame:
+    """Extract ``todo`` (shard, url, html, html_hash) inside the stage
+    that produced it, then shuffle the extracted rows by shard for the
+    write (the stage layout in the module docstring).
+
+    The shuffle groups each shard into one of ``num_shards // 4`` write
+    partitions, so each shard's directory gets one file and the shuffle
+    key matches the lineage unit. shard and the raw-html hash ride
+    through the extractor row-aligned (passthrough): the shard
+    recompute (sha2 + xxhash per row) is saved, and html_hash is what
+    the NEXT refresh keys its unchanged-page classification on
+    (run_extraction_incremental)."""
+    extracted = extract_main_content(
+        todo.select("shard", "url", "html", "html_hash"),
+        "html",
+        "url",
+        passthrough=("shard", "html_hash"),
+    )
+    return extracted.repartition(max(num_shards // 4, 1), "shard")
 
 
 def run_extraction(
@@ -188,23 +239,12 @@ def run_extraction(
     if fail_shards:
         todo = todo.where(~F.col("shard").isin(*fail_shards))
 
-    # repartition by shard so each output partition is written together
-    # (and the shuffle key matches the lineage unit)
-    todo = todo.repartition(max(num_shards // 4, 1), "shard")
-
-    # shard and the raw-html hash ride through the extractor row-aligned
-    # (passthrough): the shard recompute (sha2+xxhash per row) is saved,
-    # and html_hash is what the NEXT refresh keys its unchanged-page
-    # classification on (run_extraction_incremental)
-    extracted = extract_main_content(
-        todo.select("shard", "url", "html").withColumn(
-            # NULL html extracts as b"" (extract_bytes), so it hashes
-            # as b"" too — the refresh must see the same hash
-            "html_hash", F.md5(F.coalesce(F.col("html"), F.lit(b"")))
-        ),
-        "html",
-        "url",
-        passthrough=("shard", "html_hash"),
+    # extract in the scan stage, then shuffle the extracted rows by
+    # shard (extract_shards); NULL html extracts as b"" (extract_bytes),
+    # so it hashes as b"" too — the refresh must see the same hash
+    extracted = extract_shards(
+        todo.withColumn("html_hash", F.md5(F.coalesce(F.col("html"), F.lit(b"")))),
+        num_shards,
     )
 
     write_extracted_partitioned(extracted, out_path, table_format)
@@ -369,13 +409,8 @@ def run_extraction_incremental(
         & F.col("_new_hash").eqNullSafe(F.col("_prev_hash"))
     ).select("url")
 
-    todo = hashed.join(unchanged_urls, "url", "left_anti")
-    todo = todo.repartition(max(num_shards // 4, 1), "shard")
-    extracted_new = extract_main_content(
-        todo.select("shard", "url", "html", "html_hash"),
-        "html",
-        "url",
-        passthrough=("shard", "html_hash"),
+    extracted_new = extract_shards(
+        hashed.join(unchanged_urls, "url", "left_anti"), num_shards
     )
     # the unchanged set is corpus-sized — a plain url-keyed semi-join,
     # never a broadcast. The reused rows' shard is RECOMPUTED (not

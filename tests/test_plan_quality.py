@@ -5,7 +5,9 @@ on must be visible in `explain` output, not just intended.
 - predicate pushdown: filters reach the parquet scan (PushedFilters);
 - broadcast joins: small dims and the lineage anti-join broadcast;
 - partial aggregation: map-side combine before the shuffle;
-- whole-stage codegen spans exist on the relational queries.
+- whole-stage codegen spans exist on the relational queries;
+- one Python stage per extraction pass: the extractor sits in the scan
+  stage below the shard shuffle, and the lineage frames are JVM scans.
 """
 
 import re
@@ -14,6 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from sax_wasm_spark.operators.extract import extract_main_content
+from sax_wasm_spark.plans.lineage import (
+    completed_shards,
+    extract_shards,
+    lineage_rows,
+    with_shard,
+)
 from sax_wasm_spark.plans.queries import (
     q01_pricing_summary,
     q02_revenue_by_nation,
@@ -42,6 +50,50 @@ def test_extract_scan_prunes_columns(spark, pages_path):
     assert m, plan[:2000]
     cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
     assert cols == {"url", "html"}, f"scan reads {cols}, wanted only url+html"
+
+
+def tree_of(df) -> str:
+    """Indented operator tree, one node per line (child below parent)."""
+    return df._jdf.queryExecution().executedPlan().treeString()
+
+
+def test_extraction_python_stage_sits_below_shard_shuffle(spark, pages_path, tmp_path):
+    """The extraction pass runs ONE Python stage, inside the scan stage:
+    the extractor reads the anti-joined pages unshuffled and only its
+    output crosses the shard shuffle. A shuffle in front of it would make
+    the number of Python tasks follow the shuffle's partition count
+    (num_shards // 4) instead of the input splits."""
+    pages = spark.read.parquet(pages_path)
+    done = completed_shards(spark, str(tmp_path / "no_lineage"))
+    todo = with_shard(pages, 64).join(F.broadcast(done), "shard", "left_anti")
+    tree = tree_of(
+        extract_shards(todo.withColumn("html_hash", F.md5("html")), 64)
+    ).splitlines()
+    py = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
+    assert len(py) == 1, "\n".join(tree)
+    shuffles = [i for i, ln in enumerate(tree) if "Exchange hashpartitioning(" in ln]
+    assert len(shuffles) == 1, "\n".join(tree)
+    assert "Exchange hashpartitioning(shard" in tree[shuffles[0]], "\n".join(tree)
+    assert shuffles[0] < py[0], "\n".join(tree)  # the shuffle is above the extractor
+
+
+def test_empty_completed_shards_is_a_jvm_scan(spark, tmp_path):
+    plan = plan_of(completed_shards(spark, str(tmp_path / "no_lineage")))
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_lineage_rows_are_a_jvm_scan(spark):
+    from pyspark.sql import Row
+
+    rows = [
+        Row(shard=s, status="ok", n_docs=3, n_chars=40, n_events=9, run_id="r", finished_at=1)
+        for s in range(3)
+    ]
+    df = lineage_rows(spark, rows)
+    plan = plan_of(df)
+    assert "Scan ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert [tuple(r) for r in df.collect()] == [tuple(r) for r in rows]
 
 
 def test_filter_pushdown_reaches_scan(spark, pages_path):

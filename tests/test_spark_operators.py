@@ -72,6 +72,25 @@ def test_extract_matches_local(spark, pages):
         assert got[r.url] == text, f"url={r.url}"
 
 
+def test_extract_slices_large_batches(spark):
+    """One partition of 300 pages reaches the extractor as a batch larger
+    than SLICE_ROWS; every slice's rows come out once and unchanged."""
+    from sax_wasm_spark.operators.extract import SLICE_ROWS
+
+    n = 300
+    assert n > 2 * SLICE_ROWS
+    one = synthesize_pages(spark, n, partitions=1).coalesce(1)
+    got = {}
+    for r in extract_main_content(one).collect():
+        assert r.url not in got, f"url={r.url} extracted twice"
+        got[r.url] = (bytes(r.text_bytes), r.n_events, r.status)
+    rows = one.select("url", "html").collect()
+    assert len(got) == len(rows) == n
+    for r in rows:
+        text, _, n_events, status, _ = extract_bytes(bytes(r.html))
+        assert got[r.url] == (text, n_events, status), f"url={r.url}"
+
+
 def test_extract_drops_boilerplate():
     _, _, html, _, _ = build_page(1)  # boilerplate-rich page
     text, spans, n_events, status, title = extract_bytes(html)
