@@ -117,6 +117,23 @@ def _scalar(entries: dict, tag: int, default=None):
     return e[1][0] if e[1] else default
 
 
+def _int_values(entries: dict, tag: int) -> tuple | None:
+    """An integer tag's values, or None when absent. A wire type that
+    decodes to anything else (a bit-flipped RATIONAL, an ASCII string)
+    is a TiffError naming the tag, never a TypeError further down."""
+    e = entries.get(tag)
+    if e is None:
+        return None
+    if not all(isinstance(v, int) for v in e[1]):
+        raise TiffError(f"tag 0x{tag:04x} has non-integer field type {e[0]}")
+    return e[1]
+
+
+def _int_scalar(entries: dict, tag: int, default=None):
+    vals = _int_values(entries, tag)
+    return vals[0] if vals else default
+
+
 def _unpackbits(data: bytes, expected: int) -> bytes:
     """Apple PackBits (TIFF 6.0 §9)."""
     out = bytearray()
@@ -160,17 +177,18 @@ def decode_tiff(data: bytes, max_pixels: int = 1 << 24) -> TiffImage:
         raise TiffError(f"bad TIFF magic {magic}")
     entries, _nxt = _read_ifd(data, first, bo)
 
-    width = _scalar(entries, _T_WIDTH)
-    height = _scalar(entries, _T_HEIGHT)
+    width = _int_scalar(entries, _T_WIDTH)
+    height = _int_scalar(entries, _T_HEIGHT)
     if not width or not height:
         raise TiffError("missing ImageWidth/ImageLength")
     if width * height > max_pixels:
         raise TiffError(f"{width}x{height} exceeds max_pixels={max_pixels}")
-    comp = _scalar(entries, _T_COMPRESSION, 1)
-    photo = _scalar(entries, _T_PHOTOMETRIC, 1)
-    spp = _scalar(entries, _T_SAMPLES_PER_PIXEL, 1)
-    bits_e = entries.get(_T_BITS)
-    bits = bits_e[1] if bits_e else ((1,) if photo in (0, 1) else (8,) * spp)
+    comp = _int_scalar(entries, _T_COMPRESSION, 1)
+    photo = _int_scalar(entries, _T_PHOTOMETRIC, 1)
+    spp = _int_scalar(entries, _T_SAMPLES_PER_PIXEL, 1)
+    bits = _int_values(entries, _T_BITS)
+    if bits is None:
+        bits = (1,) if photo in (0, 1) else (8,) * spp
     if not bits:
         raise TiffError("empty BitsPerSample")
     if photo == 2:
@@ -183,7 +201,7 @@ def decode_tiff(data: bytes, max_pixels: int = 1 << 24) -> TiffImage:
         raise TiffError(f"unsupported photometric {photo}")
     if comp not in (1, 4, 5, 32773):
         raise TiffError(f"unsupported compression {comp}")
-    predictor = _scalar(entries, _T_PREDICTOR, 1)
+    predictor = _int_scalar(entries, _T_PREDICTOR, 1)
     if predictor not in (1, 2):
         raise TiffError(f"unsupported predictor {predictor}")
     if predictor == 2 and bits[0] != 8:
@@ -191,13 +209,13 @@ def decode_tiff(data: bytes, max_pixels: int = 1 << 24) -> TiffImage:
     if comp == 4 and bits[0] != 1:
         raise TiffError("CCITT G4 requires 1-bit bilevel")
 
-    offs_e, counts_e = entries.get(_T_STRIP_OFFSETS), entries.get(_T_STRIP_COUNTS)
-    if offs_e is None or counts_e is None:
+    offsets = _int_values(entries, _T_STRIP_OFFSETS)
+    counts = _int_values(entries, _T_STRIP_COUNTS)
+    if offsets is None or counts is None:
         raise TiffError("missing strip offsets/byte counts")
-    offsets, counts = offs_e[1], counts_e[1]
     if len(offsets) != len(counts):
         raise TiffError("StripOffsets/StripByteCounts length mismatch")
-    rows_per_strip = _scalar(entries, _T_ROWS_PER_STRIP, height)
+    rows_per_strip = _int_scalar(entries, _T_ROWS_PER_STRIP, height)
 
     bpp = spp if bits[0] == 8 else 0  # bytes/pixel for 8-bit paths
     row_bytes = width * bpp if bpp else (width + 7) // 8

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rows import map_rows
 from .tokenize import tokenize_events
 
 _EV_TEXT = 0
@@ -463,40 +464,20 @@ def extract_docx_paragraphs(
     unzip stage, then ONE id-partitioned window with the groupBy on
     (id…, para_idx) reusing its exchange — a single shuffle
     end-to-end. Unreadable packages (not a ZIP, missing member, CRC
-    fail) are dropped by the unzip stage with the typed reason in
-    executor logs — per-package status belongs to an upstream
-    inventory pass, not the per-paragraph table."""
+    fail, ``ZipError``) are dropped by the unzip stage —
+    per-package status belongs to an upstream inventory pass, not the
+    per-paragraph table."""
+    from ..kernel.zipread import ZipError, zip_find  # noqa: PLC0415
+
     ids = list(id_cols)
 
-    def unzip(batches):
-        import pandas as pd  # noqa: PLC0415
+    def unzip(data):
+        try:
+            return [(zip_find(data or b"", "word/document.xml"),)]
+        except ZipError:
+            return []
 
-        from ..kernel.zipread import ZipError, zip_find  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "xml")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[docx_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    xml = zip_find(data or b"", "word/document.xml")
-                except ZipError:
-                    continue
-                for c, _vals in id_lists:
-                    out[c].append(_vals[row])
-                out["xml"].append(xml)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
-    )
-    xml_df = packages.select(*ids, docx_col).mapInPandas(
-        unzip, schema=f"{id_schema}, xml binary"
-    )
+    xml_df = map_rows(packages, unzip, [docx_col], "xml binary", ids)
     ev = tokenize_events(
         xml_df,
         html_col="xml",
@@ -639,52 +620,28 @@ def extract_epub_chapters(
     order is the spine's, NOT the archive's), and each chapter runs
     through the SAME main-content classifier as the web corpus
     (boilerplate stripped, title from <title>). Unreadable packages
-    are dropped by the resolve stage (typed reasons in executor
-    logs). Scale shape: two row-local stages + the extractor's
+    (``ZipError``/``ValueError``) are dropped by the resolve stage.
+    Scale shape: two row-local stages + the extractor's
     mapInArrow — zero shuffles in this operator itself."""
+    from ..kernel.zipread import ZipError  # noqa: PLC0415
     from .extract import extract_main_content  # noqa: PLC0415
 
     ids = list(id_cols)
 
-    def resolve(batches):
-        import pandas as pd  # noqa: PLC0415
+    def resolve(data):
+        try:
+            return epub_spine(data or b"")
+        except (ZipError, ValueError):
+            return []
 
-        from ..kernel.zipread import ZipError  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "spine_idx", "path", "url", "html")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[epub_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    chapters = epub_spine(data or b"")
-                except (ZipError, ValueError):
-                    continue
-                for s, path, xhtml in chapters:
-                    for c, _vals in id_lists:
-                        out[c].append(_vals[row])
-                    out["spine_idx"].append(s)
-                    out["path"].append(path)
-                    out["url"].append(f"epub:{row}:{s}")
-                    out["html"].append(xhtml)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
+    chapters = map_rows(
+        packages, resolve, [epub_col], "spine_idx int, path string, html binary", ids
     )
-    pages = packages.select(*ids, epub_col).mapInPandas(
-        resolve,
-        schema=f"{id_schema}, spine_idx int, path string, url string, html binary",
-    )
+    # the chapter path stands in for the extractor's url column
     ex = extract_main_content(
-        pages, html_col="html", url_col="url",
-        passthrough=(*ids, "spine_idx", "path"),
+        chapters, html_col="html", url_col="path", passthrough=(*ids, "spine_idx")
     )
-    return ex.select(*ids, "spine_idx", "path", "title", "text")
+    return ex.select(*ids, "spine_idx", F.col("url").alias("path"), "title", "text")
 
 
 _FEED_TEXT_FIELDS = ("title", "pubDate", "updated", "guid", "id", "link")
@@ -889,65 +846,35 @@ def extract_xlsx_cells(
     shape: one windowed exchange per part plus ONE co-partitioned
     join keyed (id…, sst index) — shared strings are per-document, so
     the join never crosses documents."""
+    from ..kernel.zipread import ZipError, zip_entries, zip_read  # noqa: PLC0415
+
     ids = list(id_cols)
 
-    def unzip(batches):
-        import pandas as pd  # noqa: PLC0415
+    def unzip(data):
+        data = data or b""
+        # ONE central-directory pass serves both members
+        by_name = {e.name: e for e in zip_entries(data)}
+        sheet_e = by_name.get("xl/worksheets/sheet1.xml")
+        if sheet_e is None:
+            raise ZipError("no xl/worksheets/sheet1.xml")
+        sheet = zip_read(data, sheet_e)
+        sst_e = by_name.get("xl/sharedStrings.xml")
+        return [("sheet", sheet), ("sst", zip_read(data, sst_e) if sst_e else b"<sst/>")]
 
-        from ..kernel.zipread import (  # noqa: PLC0415
-            ZipError,
-            zip_entries,
-            zip_read,
-        )
-
-        for pdf in batches:
-            out = {c: [] for c in (*ids, "part", "xml")}
-            id_lists = [(c, pdf[c].tolist()) for c in ids]  # r8: no per-row iloc
-            data_list = pdf[xlsx_col].tolist()
-            for row in range(len(data_list)):
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-
-                def emit(part, xml, _row=row):
-                    for c, _vals in id_lists:
-                        out[c].append(_vals[_row])
-                    out["part"].append(part)
-                    out["xml"].append(xml)
-
-                try:  # ONE central-directory pass serves both members
-                    by_name = {e.name: e for e in zip_entries(data or b"")}
-                    sheet_e = by_name.get("xl/worksheets/sheet1.xml")
-                    if sheet_e is None:
-                        raise ZipError("no xl/worksheets/sheet1.xml")
-                    sheet = zip_read(data, sheet_e)
-                    sst_e = by_name.get("xl/sharedStrings.xml")
-                    sst = zip_read(data, sst_e) if sst_e else b"<sst/>"
-                except ZipError as e:
-                    # the key must not vanish: an error part-row flows
-                    # through to one kind='error:*' output row
-                    emit("error", str(e).encode("utf-8", "replace"))
-                    continue
-                emit("sheet", sheet)
-                emit("sst", sst)
-            yield pd.DataFrame(out)
-
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in [packages.schema[c] for c in ids]
+    # an unreadable package comes back as one part='error:…' row, which
+    # flows through to one kind='error:…' output row: the key never vanishes
+    parts = map_rows(
+        packages, unzip, [xlsx_col], "part string, xml binary", ids, error_col="part"
     )
-    parts = packages.select(*ids, xlsx_col).mapInPandas(
-        unzip, schema=f"{id_schema}, part string, xml binary"
-    )
-    err_rows = parts.where(F.col("part") == "error").select(
+    err_rows = parts.where(~F.col("part").isin("sheet", "sst")).select(
         *ids,
         F.lit(None).cast("int").alias("row_idx"),
         F.lit(None).cast("int").alias("col_idx"),
-        F.concat(F.lit("error:"), F.col("xml").cast("string")).alias("kind"),
+        F.col("part").alias("kind"),
         F.lit(None).cast("string").alias("value"),
     )
     ev = tokenize_events(
-        parts.where(F.col("part") != "error"),
+        parts.where(F.col("part").isin("sheet", "sst")),
         html_col="xml",
         id_cols=(*ids, "part"),
         events=_MASK,
@@ -1114,77 +1041,33 @@ def extract_tar_members(
     other files and directories carry NULL. A malformed archive yields
     one row with NULL member fields and ``kind='error:…'`` — the key
     never vanishes. Row-local, zero shuffle."""
-    from pyspark.sql.types import (  # noqa: PLC0415
-        IntegerType as _Int,
-        LongType as _Long,
-        StringType as _Str,
-        StructField as _SF,
-        StructType as _ST,
-    )
+    from ..kernel.tarread import tar_members  # noqa: PLC0415
 
-    ids = list(id_cols)
-    id_fields = [packages.schema[c] for c in ids]
-    out_schema = _ST(
-        list(id_fields)
-        + [
-            _SF("member_idx", _Int(), True),
-            _SF("name", _Str(), True),
-            _SF("kind", _Str(), False),
-            _SF("size", _Long(), True),
-            _SF("text", _Str(), True),
+    def members(data):
+        ms = tar_members(data or b"")
+        if not ms:  # valid but empty: the key survives
+            return [(None, None, "empty", None, None)]
+        return [
+            (
+                idx,
+                m.name,
+                "dir" if m.typeflag == "5" else "file",
+                m.size,
+                m.data.decode("utf-8", "replace")
+                if m.typeflag == "0" and m.name.rsplit(".", 1)[-1] in ("txt", "md")
+                else None,
+            )
+            for idx, m in enumerate(ms)
         ]
+
+    return map_rows(
+        packages,
+        members,
+        [tar_col],
+        "member_idx int, name string, kind string not null, size bigint, text string",
+        id_cols,
+        error_col="kind",
     )
-
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from ..kernel.tarread import TarError, tar_members  # noqa: PLC0415
-
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            id_lists = [pdf[c].tolist() for c in ids]  # r8: no per-row iloc
-            data_list = pdf[tar_col].tolist()
-            for row in range(len(data_list)):
-                vals = [v[row] for v in id_lists]
-                data = data_list[row]
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                try:
-                    members = tar_members(data or b"")
-                except TarError as e:
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(None)
-                    out["name"].append(None)
-                    out["kind"].append(f"error:{e}")
-                    out["size"].append(None)
-                    out["text"].append(None)
-                    continue
-                if not members:  # valid but empty: the key survives
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(None)
-                    out["name"].append(None)
-                    out["kind"].append("empty")
-                    out["size"].append(None)
-                    out["text"].append(None)
-                    continue
-                for idx, m in enumerate(members):
-                    for c, v in zip(ids, vals):
-                        out[c].append(v)
-                    out["member_idx"].append(idx)
-                    out["name"].append(m.name)
-                    out["kind"].append("dir" if m.typeflag == "5" else "file")
-                    out["size"].append(m.size)
-                    out["text"].append(
-                        m.data.decode("utf-8", "replace")
-                        if m.typeflag == "0"
-                        and m.name.rsplit(".", 1)[-1] in ("txt", "md")
-                        else None
-                    )
-            yield pd.DataFrame(out)
-
-    return packages.select(*ids, tar_col).mapInPandas(run, schema=out_schema)
 
 
 _FEED_MIME = {

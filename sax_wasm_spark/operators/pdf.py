@@ -5,8 +5,8 @@ PDF/layout parse, DOM heuristics"; this module is the PDF leg, layered
 on the from-scratch parser in :mod:`sax_wasm_spark.kernel.pdftext` the
 same way operators/extract.py layers on the SAX kernel:
 
-* CPU-bound pure-Python work runs inside ``mapInArrow`` (one Arrow batch
-  in, one out — no pandas object-dtype intermediate), so it scales with
+* CPU-bound pure-Python work runs inside ``mapInArrow`` through
+  :func:`.rows.map_rows` (no pandas object-dtype intermediate), so it scales with
   executor cores exactly like the HTML extract stage and inherits the
   same repartition-before-Python guidance (see queries._wrapped_docs).
 * Poison documents (truncated files, unsupported filters, non-PDFs)
@@ -27,10 +27,10 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..kernel.pdftext import PdfDocument, _runs_from_content
+from .rows import map_rows
 
 PDF_EXTRACT_FIELDS = [
     StructField("text", StringType(), True),
@@ -64,39 +64,13 @@ def extract_pdf(
     df: DataFrame, pdf_col: str = "pdf", id_cols: tuple[str, ...] = ("url",)
 ) -> DataFrame:
     """pages(id…, pdf:binary) → (id…, text, n_pages, n_runs, status)."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
-
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + PDF_EXTRACT_FIELDS)
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    src = df.select(*id_cols, pdf_col)
-    n_id = len(id_cols)
-
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            pdfs = rb.column(n_id).to_pylist()
-            texts, n_pages, n_runs, status = [], [], [], []
-            for data in pdfs:
-                t, p, r, s = extract_pdf_document(data if data is not None else b"")
-                texts.append(t)
-                n_pages.append(p)
-                n_runs.append(r)
-                status.append(s)
-            arrays = [pa.array(ids[j], type=arrow_fields[j].type) for j in range(n_id)] + [
-                pa.array(texts, pa.string()),
-                pa.array(n_pages, pa.int32()),
-                pa.array(n_runs, pa.int32()),
-                pa.array(status, pa.string()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(
+        df,
+        lambda data: [extract_pdf_document(data if data is not None else b"")],
+        [pdf_col],
+        PDF_EXTRACT_FIELDS,
+        id_cols,
+    )
 
 
 PDF_IMAGE_FIELDS = [
@@ -141,56 +115,19 @@ PDF_OUTLINE_FIELDS = [
 ]
 
 
-def _per_pdf_rows(
-    df: DataFrame,
-    pdf_col: str,
-    id_cols: tuple[str, ...],
-    item_fields: list,
-    fn,
-) -> DataFrame:
-    """Shared explode shape for per-document PDF inventories: ``fn``
-    maps one document's bytes to a list of row tuples matching
-    ``item_fields``; id columns replicate per row. Poison documents
-    contribute zero rows (document-level health is the extract query's
-    ``status`` column; inventories are analytics projections)."""
-    import pyarrow as pa  # noqa: PLC0415
+def _inventory_rows(fn):
+    """Per-document PDF inventories: ``fn`` maps one document's bytes to
+    a list of row tuples; poison documents contribute zero rows
+    (document-level health is the extract query's ``status`` column;
+    inventories are analytics projections)."""
 
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
+    def rows(data):
+        try:
+            return fn(data if data is not None else b"")
+        except Exception:  # poison doc → zero inventory rows
+            return []
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + item_fields)
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    src = df.select(*id_cols, pdf_col)
-    n_id = len(id_cols)
-
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            pdfs = rb.column(n_id).to_pylist()
-            out_ids: list[list] = [[] for _ in range(n_id)]
-            cols: list[list] = [[] for _ in item_fields]
-            for row, data in enumerate(pdfs):
-                try:
-                    recs = fn(data if data is not None else b"")
-                except Exception:  # poison doc → zero inventory rows
-                    continue
-                for rec in recs:
-                    for j in range(n_id):
-                        out_ids[j].append(ids[j][row])
-                    for c, v in zip(cols, rec):
-                        c.append(v)
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type) for j in range(n_id)
-            ] + [
-                pa.array(cols[k], type=arrow_fields[n_id + k].type)
-                for k in range(len(item_fields))
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return src.mapInArrow(run, schema=out_schema)
+    return rows
 
 
 def pdf_images(
@@ -204,7 +141,7 @@ def pdf_images(
     parse it shares with text extraction."""
     from ..kernel.pdftext import pdf_image_stats  # noqa: PLC0415
 
-    return _per_pdf_rows(df, pdf_col, id_cols, PDF_IMAGE_FIELDS, pdf_image_stats)
+    return map_rows(df, _inventory_rows(pdf_image_stats), [pdf_col], PDF_IMAGE_FIELDS, id_cols)
 
 
 def pdf_decode_images(
@@ -221,7 +158,9 @@ def pdf_decode_images(
     variants it proves decode-under-encryption end to end."""
     from ..kernel.pdftext import pdf_decode_image_stats  # noqa: PLC0415
 
-    return _per_pdf_rows(df, pdf_col, id_cols, PDF_DECODE_FIELDS, pdf_decode_image_stats)
+    return map_rows(
+        df, _inventory_rows(pdf_decode_image_stats), [pdf_col], PDF_DECODE_FIELDS, id_cols
+    )
 
 
 def pdf_form_fields(
@@ -238,7 +177,7 @@ def pdf_form_fields(
         fields = PdfDocument(data).form_fields()
         return [(i, n, v) for i, (n, v) in enumerate(fields)]
 
-    return _per_pdf_rows(df, pdf_col, id_cols, PDF_FIELD_FIELDS, fn)
+    return map_rows(df, _inventory_rows(fn), [pdf_col], PDF_FIELD_FIELDS, id_cols)
 
 
 def pdf_outline(
@@ -252,7 +191,7 @@ def pdf_outline(
         items = PdfDocument(data).outline_titles()
         return [(i, d, t) for i, (d, t) in enumerate(items)]
 
-    return _per_pdf_rows(df, pdf_col, id_cols, PDF_OUTLINE_FIELDS, fn)
+    return map_rows(df, _inventory_rows(fn), [pdf_col], PDF_OUTLINE_FIELDS, id_cols)
 
 
 def render_pdf_column(
@@ -272,65 +211,26 @@ def render_pdf_column(
     identical regardless of partitioning. ``images_col`` (int) embeds
     that many deterministic image XObjects per page (q58's inventory
     corpus); 0/absent keeps the text-only corpus byte-identical."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
-
     from ..sources.pdfgen import N_VARIANTS, build_pdf  # noqa: PLC0415
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + [StructField("pdf", BinaryType(), False)])
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    extra_cols = [
-        c
-        for c in (variant_col, images_col, fields_col, outline_col, real_images_col)
-        if c
-    ]
-    cols = list(id_cols) + [text_col] + extra_cols
-    src = df.select(*cols)
-    n_id = len(id_cols)
+    opt_cols = {
+        "variant": variant_col,
+        "n_images": images_col,
+        "n_fields": fields_col,
+        "n_outline": outline_col,
+        "n_real_images": real_images_col,
+    }
+    given = {k: c for k, c in opt_cols.items() if c}
 
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            texts = rb.column(n_id).to_pylist()
-            col = n_id + 1
-            extras: dict[str, list] = {}
-            for name in (
-                variant_col, images_col, fields_col, outline_col, real_images_col
-            ):
-                if name:
-                    extras[name] = rb.column(col).to_pylist()
-                    col += 1
-            zero = [0] * len(texts)
-            variants = (
-                extras[variant_col]
-                if variant_col
-                else [int(i) % N_VARIANTS for i in ids[0]]
-            )
-            images = extras[images_col] if images_col else zero
-            fields = extras[fields_col] if fields_col else zero
-            outlines = extras[outline_col] if outline_col else zero
-            real_imgs = extras[real_images_col] if real_images_col else zero
-            pdfs = [
-                build_pdf(
-                    t if t is not None else "",
-                    variant=int(v) % N_VARIANTS,
-                    n_images=int(ni or 0),
-                    n_fields=int(nf or 0),
-                    n_outline=int(no or 0),
-                    n_real_images=int(nr or 0),
-                )
-                for t, v, ni, nf, no, nr in zip(
-                    texts, variants, images, fields, outlines, real_imgs
-                )
-            ]
-            arrays = [pa.array(ids[j], type=arrow_fields[j].type) for j in range(n_id)] + [
-                pa.array(pdfs, pa.binary())
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    def render(first_id, text, *opts):
+        kw = {k: int(v or 0) for k, v in zip(given, opts)}
+        kw["variant"] = kw.get("variant", int(first_id)) % N_VARIANTS
+        return [(build_pdf(text if text is not None else "", **kw),)]
 
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(
+        df,
+        render,
+        [id_cols[0], text_col, *given.values()],
+        [StructField("pdf", BinaryType(), False)],
+        id_cols,
+    )

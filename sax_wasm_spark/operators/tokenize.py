@@ -2,7 +2,7 @@
 
 Design (SURVEY.md §1.6/§3.4): the corpus is a DataFrame; each row's
 ``html`` binary cell is one reference byte-stream. The kernel runs
-inside ``mapInPandas`` (Arrow-batched, iterator API — the fast Python
+inside ``mapInArrow`` (Arrow-batched, iterator API — the fast Python
 lane per the input_hint's "no per-row Python UDFs"), emitting the flat
 event schema of FIXTURES.md §2 one row per event.
 
@@ -35,6 +35,7 @@ from ..kernel.collect import ALL_EVENTS, EventCollector
 from ..kernel.fastsax import parse_doc_flat
 from ..kernel.fastsax_np import parse_doc_flat_np
 from ..kernel.saxkernel import SaxParser
+from .rows import map_rows
 
 _EVENT_FIELDS = [
     StructField("event", IntegerType(), False),
@@ -162,30 +163,15 @@ def tokenize_nested(
     analytics (flat columns transfer faster through Arrow); this shape
     suits per-document consumers that want the whole stream in one cell.
     """
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(
-        list(id_fields) + [StructField("events", ArrayType(StructType(_EVENT_FIELDS)), False)]
+    def nest(data):
+        if data is None:
+            return []
+        return [([dict(zip(_COLS, r)) for r in parse_doc_flat(data, events)],)]
+
+    return map_rows(
+        df,
+        nest,
+        [html_col],
+        [StructField("events", ArrayType(StructType(_EVENT_FIELDS)), False)],
+        id_cols,
     )
-    src = df.select(*id_cols, html_col)
-
-    def run(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {c: [] for c in id_cols}
-            out["events"] = []
-            id_lists = [(c, pdf[c].tolist()) for c in id_cols]  # r8: no per-row iloc
-            html_list = pdf[html_col].tolist()
-            for i in range(len(html_list)):
-                data = html_list[i]
-                if data is None:
-                    continue
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                rows = parse_doc_flat(data, events)
-                for c, _vals in id_lists:
-                    out[c].append(_vals[i])
-                out["events"].append([dict(zip(_COLS, r)) for r in rows])
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, schema=out_schema)

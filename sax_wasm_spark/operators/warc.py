@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .rows import map_rows
+
 WARC_PAGE_FIELDS = [
     StructField("url", StringType(), True),
     StructField("warc_date", StringType(), True),
@@ -256,53 +258,25 @@ def _render_blob_column(
     make_blob,
 ) -> DataFrame:
     """Shared synthesis scaffold of the WARC/WET render twins:
-    (id…, text[, url][, variant]) → (id…, warc:binary) via mapInArrow,
+    (id…, text[, url][, variant]) → (id…, warc:binary) via map_rows,
     with ``make_blob(first_id, url, text, variant) -> bytes`` supplying
     the per-document file. The default url is the ONE deterministic
     scheme every oracle states in closed form — keeping it here (not
     copy-pasted per renderer) is what lets the oracles share it."""
-    import pyarrow as pa  # noqa: PLC0415
+    opt_cols = [c for c in (url_col, variant_col) if c]
 
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
+    def render(first_id, text, *opts):
+        url = opts[0] if url_col else f"https://synth.example.com/p/{first_id}"
+        variant = opts[-1] if variant_col else None
+        return [(make_blob(first_id, url, text if text is not None else "", variant),)]
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + [StructField("warc", BinaryType(), False)])
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    cols = list(id_cols) + [text_col]
-    if url_col:
-        cols.append(url_col)
-    if variant_col:
-        cols.append(variant_col)
-    src = df.select(*cols)
-    n_id = len(id_cols)
-
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            texts = rb.column(n_id).to_pylist()
-            col_at = n_id + 1
-            if url_col:
-                urls = rb.column(col_at).to_pylist()
-                col_at += 1
-            else:
-                urls = [f"https://synth.example.com/p/{i}" for i in ids[0]]
-            if variant_col:
-                variants = rb.column(col_at).to_pylist()
-            else:
-                variants = [None] * len(texts)
-            blobs = [
-                make_blob(i, u, t if t is not None else "", v)
-                for i, u, t, v in zip(ids[0], urls, texts, variants)
-            ]
-            arrays = [pa.array(ids[j], type=arrow_fields[j].type) for j in range(n_id)] + [
-                pa.array(blobs, pa.binary())
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(
+        df,
+        render,
+        [id_cols[0], text_col, *opt_cols],
+        [StructField("warc", BinaryType(), False)],
+        id_cols,
+    )
 
 
 def render_warc_column(
@@ -351,20 +325,9 @@ def stitch_segments(
     ``status='segment_error'`` row with a record count, so stitch
     output reconciles 1:1 against input chains. Output schema ==
     warc_to_pages (id columns = MIN over the chain's shards)."""
-    import pyarrow as pa  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
 
     from ..sources.warc import WarcError, _parse_http_response  # noqa: PLC0415
-
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + WARC_PAGE_FIELDS)
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable)
-        for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
 
     seg = df.where(F.col("status") == "segment")
     # a continuation with no WARC-Segment-Origin-ID can never join a
@@ -409,95 +372,39 @@ def stitch_segments(
             *[F.min(c).alias(c) for c in id_cols],
         )
     )
-    src = grouped.select("segment_origin", "_parts", "_total", "_url", "_date", *id_cols)
-    n_meta = 5  # origin, parts, total, url, date
 
-    def run(batches):
-        for rb in batches:
-            origins = rb.column(0).to_pylist()
-            parts_col = rb.column(1).to_pylist()
-            totals = rb.column(2).to_pylist()
-            urls_in = rb.column(3).to_pylist()
-            dates_in = rb.column(4).to_pylist()
-            ids = [rb.column(n_meta + j).to_pylist() for j in range(len(id_cols))]
-            out_ids: list[list] = [[] for _ in id_cols]
-            urls, dates, statuses, ctypes, htmls, row_status, bad, seg_n = (
-                [], [], [], [], [], [], [], [],
-            )
-            o_col, n_col, t_col, h_col = [], [], [], []
-            for i, origin in enumerate(origins):
-                recs = parts_col[i]
-                parts = {p["segment_number"]: p["html"] for p in recs}
-                heads = [
-                    p["segment_number"] for p in recs if p["segment_is_head"]
-                ]
-                n_recs = len(recs)
-                ok = (
-                    heads == [1]  # exactly one head, and it is segment 1
-                    and None not in parts
-                    and len(parts) == n_recs  # no duplicate numbers
-                    and set(parts) == set(range(1, max(parts) + 1))
-                    and totals[i] is not None
-                    and urls_in[i] is not None
-                )
-                page = None
-                if ok:
-                    payload = b"".join(
-                        parts[k] for k in range(1, max(parts) + 1)
-                    )
-                    if len(payload) == totals[i]:
-                        try:
-                            page = _parse_http_response(payload)
-                        except WarcError:
-                            page = None
-                for j in range(len(id_cols)):
-                    out_ids[j].append(ids[j][i])
-                o_col.append(origin)
-                n_col.append(None)
-                t_col.append(totals[i])
-                h_col.append(None)
-                if page is not None:
-                    status, ctype, body = page
-                    urls.append(urls_in[i])
-                    dates.append(dates_in[i])
-                    statuses.append(status)
-                    ctypes.append(ctype)
-                    htmls.append(body)
-                    row_status.append("ok")
-                    bad.append(0)
-                    seg_n.append(0)
-                else:
-                    urls.append(urls_in[i])
-                    dates.append(dates_in[i])
-                    statuses.append(None)
-                    ctypes.append(None)
-                    htmls.append(None)
-                    row_status.append("segment_error")
-                    bad.append(0)
-                    seg_n.append(n_recs)
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type)
-                for j in range(len(id_cols))
-            ] + [
-                pa.array(urls, pa.string()),
-                pa.array(dates, pa.string()),
-                pa.array(statuses, pa.int32()),
-                pa.array(ctypes, pa.string()),
-                pa.array(htmls, pa.binary()),
-                pa.array(row_status, pa.string()),
-                pa.array(bad, pa.int32()),
-                pa.array(seg_n, pa.int32()),
-                pa.array(o_col, pa.string()),
-                pa.array(n_col, pa.int64()),
-                pa.array(t_col, pa.int64()),
-                pa.array(h_col, pa.bool_()),
-                pa.array([None] * len(o_col), pa.string()),
-                pa.array([None] * len(o_col), pa.string()),
-                pa.array([None] * len(o_col), pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    def stitch(origin, recs, total, url, date):
+        parts = {p["segment_number"]: p["html"] for p in recs}
+        heads = [p["segment_number"] for p in recs if p["segment_is_head"]]
+        ok = (
+            heads == [1]  # exactly one head, and it is segment 1
+            and None not in parts
+            and len(parts) == len(recs)  # no duplicate numbers
+            and set(parts) == set(range(1, max(parts) + 1))
+            and total is not None
+            and url is not None
+        )
+        page = None
+        if ok:
+            payload = b"".join(parts[k] for k in range(1, max(parts) + 1))
+            if len(payload) == total:
+                try:
+                    page = _parse_http_response(payload)
+                except WarcError:
+                    page = None
+        if page is None:
+            head = (None, None, None, "segment_error", 0, len(recs))
+        else:
+            head = (*page, "ok", 0, 0)
+        return [(url, date, *head, origin, None, total, None, None, None, None)]
 
-    return src.mapInArrow(run, schema=out_schema).unionByName(orphans)
+    return map_rows(
+        grouped,
+        stitch,
+        ["segment_origin", "_parts", "_total", "_url", "_date"],
+        WARC_PAGE_FIELDS,
+        id_cols,
+    ).unionByName(orphans)
 
 
 def render_warc_split_column(
@@ -513,57 +420,31 @@ def render_warc_split_column(
     stitch path is what reconstructs every page. Deterministic, no
     external data (build_warc variant 5 split at the continuation
     marker)."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
-
     from ..sources.warc import build_warc  # noqa: PLC0415
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(
-        list(id_fields)
-        + [
-            StructField("part", IntegerType(), False),
-            StructField("warc", BinaryType(), False),
-        ]
-    )
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable)
-        for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    src = df.select(*id_cols, text_col)
-    n_id = len(id_cols)
     marker = b"WARC/1.0\r\nWARC-Type: continuation"
 
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            texts = rb.column(n_id).to_pylist()
-            out_ids: list[list] = [[] for _ in range(n_id)]
-            parts, blobs = [], []
-            for r, t in enumerate(texts):
-                i = ids[0][r]
-                full = build_warc(
-                    f"https://synth.example.com/p/{i}",
-                    "2024-01-01T00:00:00Z",
-                    (t if t is not None else "").encode("utf-8"),
-                    variant=5,
-                    gzipped=False,
-                )
-                cut = full.find(marker)
-                for part, blob in ((0, full[:cut]), (1, full[cut:])):
-                    for j in range(n_id):
-                        out_ids[j].append(ids[j][r])
-                    parts.append(part)
-                    blobs.append(blob)
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type)
-                for j in range(n_id)
-            ] + [pa.array(parts, pa.int32()), pa.array(blobs, pa.binary())]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    def split(first_id, text):
+        full = build_warc(
+            f"https://synth.example.com/p/{first_id}",
+            "2024-01-01T00:00:00Z",
+            (text if text is not None else "").encode("utf-8"),
+            variant=5,
+            gzipped=False,
+        )
+        cut = full.find(marker)
+        return [(0, full[:cut]), (1, full[cut:])]
 
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(
+        df,
+        split,
+        [id_cols[0], text_col],
+        [
+            StructField("part", IntegerType(), False),
+            StructField("warc", BinaryType(), False),
+        ],
+        id_cols,
+    )
 
 
 def resolve_revisits(pages: DataFrame, keep_unresolved: bool = True) -> DataFrame:

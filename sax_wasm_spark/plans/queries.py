@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_main_content
+from ..operators.rows import map_rows
 from ..operators.tokenize import tokenize_events, tokenize_nested
 
 # ---------------------------------------------------------------------------
@@ -3591,23 +3592,14 @@ def q85_tiff_decode_stats(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.imagegen import build_tiff  # noqa: PLC0415
 
-        from ..sources.imagegen import build_tiff  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "img_idx": [], "img": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                for k in range(1 + did % 3):
-                    out["doc_id"].append(did)
-                    out["img_idx"].append(k)
-                    out["img"].append(build_tiff(did, k))
-            yield pd.DataFrame(out)
-
-    imgs = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, img_idx int, img binary"
+    imgs = map_rows(
+        d,
+        lambda did: [(k, build_tiff(did, k)) for k in range(1 + did % 3)],
+        ["doc_id"],
+        "img_idx int, img binary",
+        ["doc_id"],
     )
     stats = decode_image_stats(imgs, media_col="img", id_cols=("doc_id", "img_idx"))
     return stats.select(
@@ -3685,36 +3677,26 @@ def q92_feed_autodiscovery(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    def render(did):
+        links = ['<link rel="stylesheet" href="/s.css">']
+        for j in range(1 + did % 3):
+            kind = "rss" if (did + j) % 2 == 0 else "atom"
+            rel = "alternate" if j % 2 == 0 else "ALTERNATE"
+            links.append(
+                f'<link rel="{rel}" type="application/{kind}+xml"'
+                f' href="https://h{(did + j) % 7}.example.com/'
+                f"feed{j}.xml\">"
+            )
+        links.append('<link rel="alternate" hreflang="en" href="/en">')
+        links.append('<link type="application/rss+xml" href="/norel.xml">')
+        html = (
+            "<html><head><title>t</title>"
+            + "".join(links)
+            + '</head><body><a href="/x">text</a></body></html>'
+        )
+        return [(html.encode(),)]
 
-        for pdf in batches:
-            out = {"doc_id": [], "html": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                links = ['<link rel="stylesheet" href="/s.css">']
-                for j in range(1 + did % 3):
-                    kind = "rss" if (did + j) % 2 == 0 else "atom"
-                    rel = "alternate" if j % 2 == 0 else "ALTERNATE"
-                    links.append(
-                        f'<link rel="{rel}" type="application/{kind}+xml"'
-                        f' href="https://h{(did + j) % 7}.example.com/'
-                        f"feed{j}.xml\">"
-                    )
-                links.append('<link rel="alternate" hreflang="en" href="/en">')
-                links.append(
-                    '<link type="application/rss+xml" href="/norel.xml">'
-                )
-                html = (
-                    "<html><head><title>t</title>"
-                    + "".join(links)
-                    + '</head><body><a href="/x">text</a></body></html>'
-                )
-                out["doc_id"].append(did)
-                out["html"].append(html.encode())
-            yield pd.DataFrame(out)
-
-    pages = d.select("doc_id").mapInPandas(render, schema="doc_id long, html binary")
+    pages = map_rows(d, render, ["doc_id"], "html binary", ["doc_id"])
     feeds = discover_feed_links(pages, html_col="html", id_cols=("doc_id",))
     return feeds.orderBy("doc_id", "link_ord")
 
@@ -3754,20 +3736,10 @@ def q91_tar_members(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.targen import build_tarball  # noqa: PLC0415
 
-        from ..sources.targen import build_tarball  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "tarball": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["tarball"].append(build_tarball(int(did)))
-            yield pd.DataFrame(out)
-
-    pkgs = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, tarball binary"
+    pkgs = map_rows(
+        d, lambda did: [(build_tarball(did),)], ["doc_id"], "tarball binary", ["doc_id"]
     )
     ms = extract_tar_members(pkgs, tar_col="tarball", id_cols=("doc_id",))
     return ms.select(
@@ -3819,19 +3791,11 @@ def q90_xlsx_cells(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.xlsxgen import build_xlsx  # noqa: PLC0415
 
-        from ..sources.xlsxgen import build_xlsx  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "xlsx": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["xlsx"].append(build_xlsx(int(did)))
-            yield pd.DataFrame(out)
-
-    pkgs = d.select("doc_id").mapInPandas(render, schema="doc_id long, xlsx binary")
+    pkgs = map_rows(
+        d, lambda did: [(build_xlsx(did),)], ["doc_id"], "xlsx binary", ["doc_id"]
+    )
     cells = extract_xlsx_cells(pkgs, xlsx_col="xlsx", id_cols=("doc_id",))
     return cells.select(
         "doc_id", "row_idx", "col_idx", "kind", "value"
@@ -3881,19 +3845,11 @@ def q89_feed_discovery(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.feedgen import build_feed  # noqa: PLC0415
 
-        from ..sources.feedgen import build_feed  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "xml": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["xml"].append(build_feed(int(did)))
-            yield pd.DataFrame(out)
-
-    feeds = d.select("doc_id").mapInPandas(render, schema="doc_id long, xml binary")
+    feeds = map_rows(
+        d, lambda did: [(build_feed(did),)], ["doc_id"], "xml binary", ["doc_id"]
+    )
     items = parse_feed_items(feeds, xml_col="xml", id_cols=("doc_id",))
     return items.orderBy("doc_id", "item_idx")
 
@@ -3945,19 +3901,11 @@ def q88_epub_chapters(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.epubgen import build_epub  # noqa: PLC0415
 
-        from ..sources.epubgen import build_epub  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "epub": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["epub"].append(build_epub(int(did)))
-            yield pd.DataFrame(out)
-
-    pkgs = d.select("doc_id").mapInPandas(render, schema="doc_id long, epub binary")
+    pkgs = map_rows(
+        d, lambda did: [(build_epub(did),)], ["doc_id"], "epub binary", ["doc_id"]
+    )
     ch = extract_epub_chapters(pkgs, epub_col="epub", id_cols=("doc_id",))
     return ch.select(
         "doc_id",
@@ -4006,19 +3954,11 @@ def q87_docx_text(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.docxgen import build_docx  # noqa: PLC0415
 
-        from ..sources.docxgen import build_docx  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "docx": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["docx"].append(build_docx(int(did)))
-            yield pd.DataFrame(out)
-
-    pkgs = d.select("doc_id").mapInPandas(render, schema="doc_id long, docx binary")
+    pkgs = map_rows(
+        d, lambda did: [(build_docx(did),)], ["doc_id"], "docx binary", ["doc_id"]
+    )
     paras = extract_docx_paragraphs(pkgs, docx_col="docx", id_cols=("doc_id",))
     return paras.orderBy("doc_id", "para_idx")
 
@@ -4058,23 +3998,14 @@ def q86_exif_metadata(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.imagegen import build_jpeg_exif  # noqa: PLC0415
 
-        from ..sources.imagegen import build_jpeg_exif  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "img_idx": [], "jpeg": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                for k in range(1 + did % 3):
-                    out["doc_id"].append(did)
-                    out["img_idx"].append(k)
-                    out["jpeg"].append(build_jpeg_exif(did, k))
-            yield pd.DataFrame(out)
-
-    imgs = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, img_idx int, jpeg binary"
+    imgs = map_rows(
+        d,
+        lambda did: [(k, build_jpeg_exif(did, k)) for k in range(1 + did % 3)],
+        ["doc_id"],
+        "img_idx int, jpeg binary",
+        ["doc_id"],
     )
     ex = extract_exif(imgs, media_col="jpeg", id_cols=("doc_id", "img_idx"))
     return ex.select(
@@ -4142,23 +4073,14 @@ def q84_mixed_captions(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.vttgen import build_srt, build_vtt  # noqa: PLC0415
 
-        from ..sources.vttgen import build_srt, build_vtt  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "cap_idx": [], "cap": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                for k, build in ((0, build_vtt), (1, build_srt)):
-                    out["doc_id"].append(did)
-                    out["cap_idx"].append(k)
-                    out["cap"].append(build(did, k))
-            yield pd.DataFrame(out)
-
-    caps = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, cap_idx int, cap binary"
+    caps = map_rows(
+        d,
+        lambda did: [(0, build_vtt(did, 0)), (1, build_srt(did, 1))],
+        ["doc_id"],
+        "cap_idx int, cap binary",
+        ["doc_id"],
     )
     cues = parse_caption_cues(caps, media_col="cap", id_cols=("doc_id", "cap_idx"))
     return cues.select(
@@ -4234,24 +4156,15 @@ def q83_pdf_xmp_metadata(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..kernel.pdftext import PdfDocument  # noqa: PLC0415
+    from ..sources.pdfgen import build_pdf_xmp  # noqa: PLC0415
 
-        from ..kernel.pdftext import PdfDocument  # noqa: PLC0415
-        from ..sources.pdfgen import build_pdf_xmp  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "xmp": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                out["doc_id"].append(did)
-                out["xmp"].append(
-                    PdfDocument(build_pdf_xmp(did)).xmp_metadata()
-                )
-            yield pd.DataFrame(out)
-
-    packets = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, xmp binary"
+    packets = map_rows(
+        d,
+        lambda did: [(PdfDocument(build_pdf_xmp(did)).xmp_metadata(),)],
+        ["doc_id"],
+        "xmp binary",
+        ["doc_id"],
     )
     fields = parse_xmp_fields(packets, xmp_col="xmp", id_cols=("doc_id",))
     return fields.select(
@@ -4293,19 +4206,11 @@ def q82_ccitt_scan_decode(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.pdfgen import build_pdf_ccitt  # noqa: PLC0415
 
-        from ..sources.pdfgen import build_pdf_ccitt  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "pdf": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["pdf"].append(build_pdf_ccitt(int(did)))
-            yield pd.DataFrame(out)
-
-    pdfs = d.select("doc_id").mapInPandas(render, schema="doc_id long, pdf binary")
+    pdfs = map_rows(
+        d, lambda did: [(build_pdf_ccitt(did),)], ["doc_id"], "pdf binary", ["doc_id"]
+    )
     stats = pdf_decode_images(pdfs, pdf_col="pdf", id_cols=("doc_id",))
     return stats.select(
         "doc_id",
@@ -4374,23 +4279,14 @@ def q81_caption_cues(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.vttgen import build_vtt  # noqa: PLC0415
 
-        from ..sources.vttgen import build_vtt  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "cap_idx": [], "vtt": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                for k in range(1 + did % 2):
-                    out["doc_id"].append(did)
-                    out["cap_idx"].append(k)
-                    out["vtt"].append(build_vtt(did, k))
-            yield pd.DataFrame(out)
-
-    caps = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, cap_idx int, vtt binary"
+    caps = map_rows(
+        d,
+        lambda did: [(k, build_vtt(did, k)) for k in range(1 + did % 2)],
+        ["doc_id"],
+        "cap_idx int, vtt binary",
+        ["doc_id"],
     )
     cues = parse_caption_cues(caps, media_col="vtt", id_cols=("doc_id", "cap_idx"))
     return cues.select(
@@ -4464,46 +4360,29 @@ def q80_frame_image_match(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render_videos(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.videogen import (  # noqa: PLC0415
+        build_vframe_decoy,
+        build_vframe_image,
+        build_vhash_rendition,
+        n_vframes,
+    )
 
-        from ..sources.videogen import build_vhash_rendition  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "avi": []}
-            for did in pdf["doc_id"]:
-                out["doc_id"].append(int(did))
-                out["avi"].append(build_vhash_rendition(int(did), 0))
-            yield pd.DataFrame(out)
-
-    def render_images(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from ..sources.videogen import (  # noqa: PLC0415
-            build_vframe_decoy,
-            build_vframe_image,
-            n_vframes,
-        )
-
-        for pdf in batches:
-            out = {"img_doc_id": [], "img_idx": [], "img": []}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                for f in range(n_vframes(did)):
-                    out["img_doc_id"].append(did)
-                    out["img_idx"].append(f)
-                    out["img"].append(build_vframe_image(did, f))
-                out["img_doc_id"].append(did)
-                out["img_idx"].append(9)  # the decoy slot
-                out["img"].append(build_vframe_decoy(did))
-            yield pd.DataFrame(out)
-
-    videos = d.select("doc_id").mapInPandas(
-        render_videos, schema="doc_id long, avi binary"
+    videos = map_rows(
+        d,
+        lambda did: [(build_vhash_rendition(did, 0),)],
+        ["doc_id"],
+        "avi binary",
+        ["doc_id"],
     )
     frames = dhash_video_frames(videos, media_col="avi", id_cols=("doc_id",))
-    images = d.select("doc_id").mapInPandas(
-        render_images, schema="img_doc_id long, img_idx int, img binary"
+    images = map_rows(
+        d.select(F.col("doc_id").alias("img_doc_id")),
+        # one image per frame, plus the decoy in slot 9
+        lambda did: [(f, build_vframe_image(did, f)) for f in range(n_vframes(did))]
+        + [(9, build_vframe_decoy(did))],
+        ["img_doc_id"],
+        "img_idx int, img binary",
+        ["img_doc_id"],
     )
     hashes = perceptual_hash_images(
         images, media_col="img", id_cols=("img_doc_id", "img_idx")
@@ -4646,22 +4525,14 @@ def q78_video_phash_dedup(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.videogen import build_vhash_rendition  # noqa: PLC0415
 
-        from ..sources.videogen import build_vhash_rendition  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "rend_idx": [], "avi": []}
-            for did in pdf["doc_id"]:
-                for r in range(4):
-                    out["doc_id"].append(int(did))
-                    out["rend_idx"].append(r)
-                    out["avi"].append(build_vhash_rendition(int(did), r))
-            yield pd.DataFrame(out)
-
-    clips = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, rend_idx int, avi binary"
+    clips = map_rows(
+        d,
+        lambda did: [(r, build_vhash_rendition(did, r)) for r in range(4)],
+        ["doc_id"],
+        "rend_idx int, avi binary",
+        ["doc_id"],
     )
     sigs = perceptual_hash_videos(clips, media_col="avi", id_cols=("doc_id", "rend_idx"))
     return (
@@ -4823,22 +4694,14 @@ def q76_image_phash_dedup(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.imagegen import build_phash_rendition  # noqa: PLC0415
 
-        from ..sources.imagegen import build_phash_rendition  # noqa: PLC0415
-
-        for pdf in batches:
-            out = {"doc_id": [], "rend_idx": [], "img": []}
-            for did in pdf["doc_id"]:
-                for r in range(4):
-                    out["doc_id"].append(int(did))
-                    out["rend_idx"].append(r)
-                    out["img"].append(build_phash_rendition(int(did), r))
-            yield pd.DataFrame(out)
-
-    imgs = d.select("doc_id").mapInPandas(
-        render, schema="doc_id long, rend_idx int, img binary"
+    imgs = map_rows(
+        d,
+        lambda did: [(r, build_phash_rendition(did, r)) for r in range(4)],
+        ["doc_id"],
+        "rend_idx int, img binary",
+        ["doc_id"],
     )
     hashes = perceptual_hash_images(imgs, media_col="img", id_cols=("doc_id", "rend_idx"))
     return (
@@ -4905,23 +4768,15 @@ def q75_html_media_decode(spark, sf_dir):
         2 * spark.sparkContext.defaultParallelism
     )
 
-    def render(batches):
-        import pandas as pd  # noqa: PLC0415
+    from ..sources.imagegen import build_media_page  # noqa: PLC0415
 
-        from ..sources.imagegen import build_media_page  # noqa: PLC0415
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        build_media_page(int(i), 1 + int(i) % 4)
-                        for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    pages = d.select("doc_id").mapInPandas(render, schema="doc_id long, html binary")
+    pages = map_rows(
+        d,
+        lambda did: [(build_media_page(did, 1 + did % 4),)],
+        ["doc_id"],
+        "html binary",
+        ["doc_id"],
+    )
     ev = tokenize_events(pages, id_cols=("doc_id",), events=1 << 6, positions=False)
     srcs = (
         ev.where(

@@ -3,7 +3,7 @@
 Schema (authoritative, BASELINE.json input_hint):
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
-Rows are generated *distributively* (``spark.range`` → ``mapInPandas``)
+Rows are generated *distributively* (``spark.range`` → ``map_rows``)
 and *deterministically*: every column is a pure function of the row id,
 so the corpus is identical regardless of partitioning, parallelism, or
 run — the property the N-vs-4N scaling benchmark and the resume tests
@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..operators.rows import map_rows
 
 PAGES_SCHEMA = StructType(
     [
@@ -144,17 +146,8 @@ def synthesize_pages(
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
-    def gen(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = [build_page(int(i), scale) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return (
-        spark.range(start_id, start_id + n_pages, numPartitions=partitions)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+    ids = spark.range(start_id, start_id + n_pages, numPartitions=partitions)
+    return map_rows(ids, lambda i: [build_page(i, scale)], ["id"], PAGES_SCHEMA.fields)
 
 
 def write_pages(spark: SparkSession, n_pages: int, path: str, partitions: int | None = None):

@@ -1,5 +1,5 @@
 """Spark-level operator tests: tokenize/extract operators, lineage
-resume, skew salting, similarity search, multimodal plumbing, streaming.
+resume, skew salting, similarity search, multimodal decode, streaming.
 One shared local[4] session (tests/conftest.py)."""
 
 import os
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from sax_wasm_spark.kernel.collect import EventCollector
 from sax_wasm_spark.kernel.saxkernel import SaxParser
 from sax_wasm_spark.operators.extract import extract_bytes, extract_main_content
-from sax_wasm_spark.operators.multimodal import extract_media_features, media_dedup_exact
 from sax_wasm_spark.operators.similarity import ann_lsh, knn_bruteforce
 from sax_wasm_spark.operators.tokenize import tokenize_events
 from sax_wasm_spark.plans.lineage import host_stats_salted, run_extraction, with_shard
@@ -184,29 +183,6 @@ def test_ann_index_persisted(spark, tmp_path):
     assert approx_ids == oneshot_ids
 
 
-def test_multimodal_decoder_injectable(spark):
-    """A production codec plugs in as a callable — no operator edits.
-    (Defined as a closure: cloudpickle ships it by value; a real codec
-    wrapper would live in an importable module on the executors.)"""
-    import pytest
-
-    from sax_wasm_spark.operators.multimodal import extract_media_features
-
-    def _const_decoder(kind, data):
-        return 7, 9, 123, [float(len(data) % 10)] * 8
-
-    rows = [(1, "image", b"\x01\x02\x03")]
-    df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    out = extract_media_features(df, decoder=_const_decoder).collect()[0]
-    assert (out.width, out.height, out.duration_ms) == (7, 9, 123)
-    assert out.feature == [3.0] * 8
-    # "real" remains the documented NotImplementedError integration point
-    with pytest.raises(Exception):
-        extract_media_features(df, decoder="real").collect()
-    with pytest.raises(ValueError):
-        extract_media_features(df, decoder="bogus")
-
-
 def test_resolve_clusters_small_graph(spark):
     """Chain + triangle + isolated pair: min-id propagation with pointer
     jumping must label every node with its component's min id."""
@@ -327,21 +303,55 @@ def test_ivf_build_scales_in_n_lists(spark):
     assert len(counts) > 16  # assignment actually spreads across lists
 
 
+@pytest.mark.parametrize("error_col", ["status", None])
+def test_map_rows(spark, error_col):
+    """The row-map primitive: 0, 1 and 3 outputs per row with the ids
+    repeated, a NULL input cell reaching ``fn`` as None, and a raising
+    ``fn`` — one ``error:`` row with NULL outputs when the stage has an
+    error column, a failed job when it has none."""
+    from sax_wasm_spark.operators.rows import map_rows
+
+    def fan(n):
+        if n is None:
+            return [(None, "null", "ok")]
+        if n == 5:
+            raise TypeError("poison row")
+        return [(k, f"r{k}", "ok") for k in range(n)]
+
+    df = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (3, "c", 3), (4, "d", None), (5, "e", 5)],
+        "id long, tag string, n int",
+    )
+    out_ddl = "k int, v string not null, status string not null"
+    expected = [
+        (2, "b", 0, "r0", "ok"),
+        (3, "c", 0, "r0", "ok"),
+        (3, "c", 1, "r1", "ok"),
+        (3, "c", 2, "r2", "ok"),
+        (4, "d", None, "null", "ok"),
+    ]
+    if error_col is None:
+        with pytest.raises(Exception, match="poison row"):
+            map_rows(df, fan, ["n"], out_ddl, ["id", "tag"]).collect()
+        df = df.where(F.col("id") != 5)
+    else:
+        expected.append((5, "e", None, None, "error:poison row"))
+    out = map_rows(df, fan, ["n"], out_ddl, ["id", "tag"], error_col=error_col)
+    assert out.columns == ["id", "tag", "k", "v", "status"]
+    # an error row may NULL any output but the error column
+    nullable = {f.name: f.nullable for f in out.schema.fields}
+    assert (nullable["v"], nullable["status"]) == (error_col is not None, False)
+    got = sorted(out.collect(), key=lambda r: (r.id, r.k if r.k is not None else -1))
+    assert [tuple(r) for r in got] == expected
+
+
 def test_multimodal_resize_and_frames(spark):
-    """Resize (1→1) and frame-sample (1→n) plumbing: schemas, batch
-    shapes, determinism."""
-    from sax_wasm_spark.operators.multimodal import resize_images, sample_frames
+    """Frame-sample (1→n) plumbing: one row per sampled frame, in
+    timestamp order."""
+    from sax_wasm_spark.operators.multimodal import sample_frames
 
     rows = [(i, "video", bytes([i % 251]) * (400 + i)) for i in range(12)]
     df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    rs = resize_images(df, 8, 6).collect()
-    assert len(rs) == 12
-    assert all(len(r.resized) == 8 * 6 for r in rs)
-    # deterministic: same input bytes → same resized payload
-    by_id = {r.media_id: r.resized for r in rs}
-    rs2 = {r.media_id: r.resized for r in resize_images(df, 8, 6).collect()}
-    assert by_id == rs2
-
     fr = sample_frames(df, n_frames=5).collect()
     assert len(fr) == 12 * 5
     one = sorted([r for r in fr if r.media_id == 3], key=lambda r: r.frame_idx)
@@ -589,22 +599,6 @@ def test_pipeline_full_incremental_refresh(spark, pages, tmp_path):
     assert a == b
 
 
-def test_multimodal_plumbing(spark):
-    rows = [(i, ["image", "audio", "video"][i % 3], bytes([i % 251]) * (100 + i)) for i in range(30)]
-    # duplicate payloads for dedup
-    rows += [(100 + i, "image", rows[i][2]) for i in range(5)]
-    df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    feats = extract_media_features(df)
-    out = feats.collect()
-    assert len(out) == 35
-    assert all(len(r.feature) == 8 for r in out)
-    img = [r for r in out if r.kind == "image"]
-    assert all(r.width is not None and r.height is not None for r in img)
-    dedup = media_dedup_exact(feats)
-    d = {r.rep_media_id: r.n_copies for r in dedup.collect()}
-    assert d[0] == 2 and d[1] == 2  # duplicated payloads collapse
-
-
 def test_streaming_extraction(spark, pages, tmp_path):
     from sax_wasm_spark.streaming.stream import extract_stream
 
@@ -620,29 +614,6 @@ def test_streaming_extraction(spark, pages, tmp_path):
         spark.read.parquet(in_path)).collect()}
     stream = {r.url: bytes(r.text_bytes) for r in got.collect()}
     assert stream == batch
-
-
-def test_sql_udtf_surface(spark):
-    from sax_wasm_spark.functions.udtf import register
-
-    register(spark, "sax_parse_t")
-    spark.createDataFrame(
-        [(1, b'<div class="x">hello</div>')], "doc_id long, html binary"
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        """
-        SELECT s.event, s.name, CAST(s.value AS STRING) AS value
-        FROM udtf_docs d, LATERAL sax_parse_t(d.html) s
-        ORDER BY s.event_idx
-        """
-    ).collect()
-    assert [(r.event, r.name, r.value) for r in rows] == [
-        (5, "div", None),
-        (6, None, None),
-        (7, "div", None),
-        (0, None, "hello"),
-        (8, "div", None),
-    ]
 
 
 def test_streaming_watermark_dedup(spark, pages, tmp_path):
@@ -1312,35 +1283,6 @@ def test_jpeg_decode_stats_roundtrip_and_errors(spark):
     assert rows[900].pixel_sum is None and rows[901].width is None
 
 
-def test_real_decoder_jpeg_features(spark):
-    """decoder='real' now actually decodes JPEG images: true dims and
-    a pixel-derived feature vector; non-JPEG media still raises at the
-    integration point (no codec libs in this container)."""
-    import pytest
-
-    from sax_wasm_spark.operators.multimodal import extract_media_features
-    from sax_wasm_spark.sources.imagegen import build_jpeg, jpeg_geometry, jpeg_pixels
-
-    rows = [(int(d), "image", build_jpeg(d, 1)) for d in range(4)]
-    df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    got = {r.media_id: r for r in extract_media_features(df, decoder="real").collect()}
-    for d in range(4):
-        _, w, h, _ = jpeg_geometry(d, 1)
-        px = jpeg_pixels(d, 1)
-        luma = px.astype("float64").mean(axis=2)
-        r = got[d]
-        assert (r.width, r.height, r.duration_ms) == (w, h, None)
-        assert len(r.feature) == 8
-        assert abs(r.feature[0] - (luma.mean() / 255.0 - 0.5)) < 1e-6
-        assert r.status == "ok"
-
-    audio = spark.createDataFrame(
-        [(9, "audio", b"\x00" * 64)], "media_id long, kind string, media binary"
-    )
-    with pytest.raises(Exception, match="external codecs"):
-        extract_media_features(audio, decoder="real").collect()
-
-
 def test_decode_image_stats_mixed_formats(spark):
     """The sniffing decoder over ONE binary column mixing JPEG and PNG
     payloads — the real crawl shape — plus poison rows."""
@@ -1378,32 +1320,14 @@ def test_decode_image_stats_mixed_formats(spark):
     assert got[101].format is None and got[101].status.startswith("error:")
 
 
-def test_real_decoder_png_features(spark):
-    """decoder='real' decodes PNG too: true dims + pixel features."""
-    from sax_wasm_spark.operators.multimodal import extract_media_features
-    from sax_wasm_spark.sources.imagegen import build_png, png_geometry
-
-    rows = [(int(d), "image", build_png(d, 3)) for d in range(3)]
-    df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    got = {r.media_id: r for r in extract_media_features(df, decoder="real").collect()}
-    for d in range(3):
-        _, w, h, _ = png_geometry(d, 3)
-        assert (got[d].width, got[d].height) == (w, h)
-        assert got[d].status == "ok" and len(got[d].feature) == 8
-
-
 def test_decode_audio_stats_and_real_decoder(spark):
     """q73's shape in-Spark: WAV writer twin → decode_audio_stats
     recovers the closed-form sample grid bit-exactly; poison rows
-    degrade; decoder='real' returns true duration for PCM WAV."""
+    degrade."""
     import numpy as np
 
-    from sax_wasm_spark.operators.multimodal import (
-        decode_audio_stats,
-        extract_media_features,
-        render_wav_column,
-    )
-    from sax_wasm_spark.sources.audiogen import build_wav, wav_geometry, wav_samples
+    from sax_wasm_spark.operators.multimodal import decode_audio_stats, render_wav_column
+    from sax_wasm_spark.sources.audiogen import wav_geometry, wav_samples
 
     src = spark.createDataFrame(
         [(d, 3) for d in range(6)], "doc_id long, n_clips int"
@@ -1428,16 +1352,6 @@ def test_decode_audio_stats_and_real_decoder(spark):
     rows = {r.doc_id: r for r in decode_audio_stats(bad).collect()}
     assert rows[900].status.startswith("error:") and rows[900].sample_sum is None
     assert rows[901].status.startswith("error:")
-
-    media = spark.createDataFrame(
-        [(int(d), "audio", build_wav(d, 1)) for d in range(3)],
-        "media_id long, kind string, media binary",
-    )
-    feats = {r.media_id: r for r in extract_media_features(media, decoder="real").collect()}
-    for d in range(3):
-        _, _, rate, _, nf = wav_geometry(d, 1)
-        assert feats[d].duration_ms == nf * 1000 // rate
-        assert feats[d].width is None and len(feats[d].feature) == 8
 
 
 def test_decode_image_stats_gif_and_four_format_mix(spark):
@@ -1481,17 +1395,3 @@ def test_decode_image_stats_gif_and_four_format_mix(spark):
             assert (r.format, r.n_frames) == ("gif", n)
             assert r.pixel_sum == total
         assert r.status == "ok"
-
-
-def test_real_decoder_gif_features(spark):
-    """decoder='real' decodes GIF via the first frame."""
-    from sax_wasm_spark.operators.multimodal import extract_media_features
-    from sax_wasm_spark.sources.imagegen import build_gif, gif_geometry
-
-    rows = [(int(d), "image", build_gif(d, 0)) for d in range(3)]
-    df = spark.createDataFrame(rows, "media_id long, kind string, media binary")
-    got = {r.media_id: r for r in extract_media_features(df, decoder="real").collect()}
-    for d in range(3):
-        w, h, _ = gif_geometry(d, 0)
-        assert (got[d].width, got[d].height) == (w, h)
-        assert got[d].status == "ok" and len(got[d].feature) == 8

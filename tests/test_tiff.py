@@ -114,6 +114,31 @@ class TestNegatives:
         with pytest.raises(TiffError):
             decode_tiff(bytes(data))
 
+    # bit 0 of these bytes is the low bit of a LONG entry's field type
+    # (4 → 5): ImageWidth, ImageLength, StripOffsets, RowsPerStrip
+    @pytest.mark.parametrize(
+        "at, tag", [(12, 0x0100), (24, 0x0101), (72, 0x0111), (96, 0x0116)]
+    )
+    def test_rational_integer_tag_typed(self, at, tag):
+        data = bytearray(build_tiff(0, 0))
+        data[at] ^= 1
+        with pytest.raises(TiffError, match=f"tag 0x{tag:04x} has non-integer"):
+            decode_tiff(bytes(data))
+
+    def test_rational_integer_tag_is_an_error_row(self, spark):
+        """The same bit flip inside Spark: one ``error:`` row naming the
+        tag, with the sniffed format kept, and the task survives."""
+        from sax_wasm_spark.operators.multimodal import decode_image_stats
+
+        data = bytearray(build_tiff(0, 0))
+        data[12] ^= 1
+        rows = [(0, 0, bytes(data)), (1, 0, build_tiff(1, 0))]
+        df = spark.createDataFrame(rows, "doc_id long, img_idx int, img binary")
+        got = {r.doc_id: r for r in decode_image_stats(df).collect()}
+        assert got[0].status == "error:tag 0x0100 has non-integer field type 5"
+        assert got[0].format == "tiff" and got[0].pixel_sum is None
+        assert got[1].status == "ok"
+
 
 class TestTiffTwin:
     @pytest.mark.parametrize("doc_id", [0, 1, 5, 42, 1003])
