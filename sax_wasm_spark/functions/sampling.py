@@ -28,13 +28,6 @@ def hash_bucket(col: Column | str, seed: str = "", granularity: int = GRANULARIT
     return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") % granularity
 
 
-def sample_fraction(
-    df: DataFrame, fraction: float, key_col: str, seed: str = ""
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows, keyed on ``key_col``."""
-    return df.where(hash_bucket(key_col, seed) < int(fraction * GRANULARITY))
-
-
 def mix_corpus(
     df: DataFrame,
     weights: dict[str, float],

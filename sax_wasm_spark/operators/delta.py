@@ -91,8 +91,3 @@ def snapshot_diff(
         "new_hash",
     )
 
-
-def snapshot_diff_stats(diff: DataFrame, out_col: str = "change") -> DataFrame:
-    """One row per change class with its count — the refresh run's
-    audit line (partial-agg groupBy over the diff)."""
-    return diff.groupBy(out_col).agg(F.count("*").alias("n")).orderBy(out_col)

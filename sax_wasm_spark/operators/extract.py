@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 
 from ..kernel.fastsax_np import parse_doc_flat_np
 from ..kernel.saxkernel import EVT_CDATA, EVT_CLOSE_TAG, EVT_OPEN_TAG, EVT_TEXT
+from .rows import map_rows
 
 EXTRACT_MASK = (1 << EVT_OPEN_TAG) | (1 << EVT_CLOSE_TAG) | (1 << EVT_TEXT) | (1 << EVT_CDATA)
 
@@ -97,11 +98,6 @@ MIN_BLOCK_BYTES = 10
 MAX_LINK_DENSITY = 0.5
 MIN_TEXT_DENSITY = 10  # bytes of text per tag within the block
 DENSITY_EXEMPT_BYTES = 80
-
-# rows per output batch of extract_main_content: a task reads whole scan
-# splits, so turning at most this many rows into Python objects at a
-# time keeps worker memory flat however many rows a batch carries
-SLICE_ROWS = 128
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -251,83 +247,17 @@ def extract_main_content(
 ) -> DataFrame:
     """DataFrame operator: pages(url, html, …) → extracted per FIXTURES.md §3.
 
-    Output batches are pyarrow RecordBatches built directly from the
-    column lists (``mapInArrow``) — no pandas intermediate, no object-
-    dtype inference on the nested spans column per batch — one per
-    ``SLICE_ROWS``-row slice of each incoming batch.
-    ``passthrough`` columns are copied onto the output row-aligned
-    (exactly one output row per page) — e.g. the raw-html hash the
-    incremental refresh keys on (plans/lineage.run_extraction stores it
-    so the NEXT refresh can classify unchanged pages without
-    re-extracting them)."""
-    import pyarrow as pa  # noqa: PLC0415
+    One ``map_rows`` row per page; a NULL html extracts as ``b""``.
+    ``passthrough`` columns are copied onto the output row (exactly one
+    output row per page, so they ride as ``map_rows`` id columns) —
+    e.g. the raw-html hash the incremental refresh keys on
+    (plans/lineage.run_extraction stores it so the NEXT refresh can
+    classify unchanged pages without re-extracting them)."""
 
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
+    def extract(url, data):
+        text, spans, n_events, status, title = extract_bytes(data if data is not None else b"")
+        title = title.decode("utf-8", "replace") if title is not None else None
+        return [(url, title, text.decode("utf-8", "replace"), text, spans, n_events, status)]
 
-    from pyspark.sql.types import StructType as _StructType  # noqa: PLC0415
-
-    out_struct = _StructType(
-        list(EXTRACT_SCHEMA.fields) + [df.schema[c] for c in passthrough]
-    )
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_struct.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    src = df.select(url_col, html_col, *passthrough)
-
-    span_type = next(f.type for f in arrow_fields if f.name == "spans")
-    span_struct = span_type.value_type
-
-    n_extract_fields = len(EXTRACT_SCHEMA.fields)
-
-    def run(batches):
-        slices = (
-            batch.slice(off, SLICE_ROWS)
-            for batch in batches
-            for off in range(0, batch.num_rows, SLICE_ROWS)
-        )
-        for rb in slices:
-            urls = rb.column(0).to_pylist()
-            htmls = rb.column(1).to_pylist()
-            # passthrough columns are row-aligned with the input batch:
-            # slice them straight through as arrow arrays (zero copy)
-            pass_arrays = [rb.column(2 + j) for j in range(len(passthrough))]
-            out = {
-                f.name: []
-                for f in arrow_fields[:n_extract_fields]
-                if f.name != "spans"
-            }
-            # spans build flat (offsets + two int columns → ListArray of
-            # StructArray): ~6x cheaper than a python dict per span
-            span_offsets = [0]
-            span_starts: list[int] = []
-            span_ends: list[int] = []
-            for url, data in zip(urls, htmls):
-                if data is None:
-                    data = b""
-                text, spans, n_events, status, title = extract_bytes(data)
-                out["url"].append(url)
-                out["title"].append(title.decode("utf-8", "replace") if title is not None else None)
-                out["text"].append(text.decode("utf-8", "replace"))
-                out["text_bytes"].append(text)
-                for a, b in spans:
-                    span_starts.append(a)
-                    span_ends.append(b)
-                span_offsets.append(len(span_starts))
-                out["n_events"].append(n_events)
-                out["status"].append(status)
-            span_arr = pa.ListArray.from_arrays(
-                pa.array(span_offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [pa.array(span_starts, pa.int64()), pa.array(span_ends, pa.int64())],
-                    fields=list(span_struct),
-                ),
-            )
-            arrays = [
-                span_arr if f.name == "spans" else pa.array(out[f.name], type=f.type)
-                for f in arrow_fields[:n_extract_fields]
-            ] + [arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
-                 for arr in pass_arrays]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return src.mapInArrow(run, schema=out_struct)
+    out = map_rows(df, extract, [url_col, html_col], EXTRACT_SCHEMA.fields, passthrough)
+    return out.select(*EXTRACT_SCHEMA.fieldNames(), *passthrough)

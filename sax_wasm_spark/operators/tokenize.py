@@ -2,9 +2,9 @@
 
 Design (SURVEY.md §1.6/§3.4): the corpus is a DataFrame; each row's
 ``html`` binary cell is one reference byte-stream. The kernel runs
-inside ``mapInArrow`` (Arrow-batched, iterator API — the fast Python
-lane per the input_hint's "no per-row Python UDFs"), emitting the flat
-event schema of FIXTURES.md §2 one row per event.
+inside ``mapInArrow`` through ``operators/rows.map_rows`` (Arrow-batched,
+iterator API — no per-row Python UDFs), emitting the flat event schema
+of FIXTURES.md §2 one row per event.
 
 Why exploded-flat rather than array<struct>: the downstream relational
 operators (explode/filter/agg/window in SURVEY.md §2.4) all want events
@@ -12,9 +12,9 @@ as rows, and flat columns keep the Arrow transfer columnar and cheap.
 Per-document event order is carried by an explicit ``event_idx`` column
 because shuffles do not preserve row order.
 
-The per-task memory is bounded: one document's parser state + one Arrow
-batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) — the analogue
-of the reference's fixed WASM linear memory (saxWasm.ts:794).
+The per-task memory is bounded: one document's parser state + the events
+of one ``rows.SLICE_ROWS``-document slice — the analogue of the
+reference's fixed WASM linear memory (saxWasm.ts:794).
 """
 
 from __future__ import annotations
@@ -31,10 +31,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel.collect import ALL_EVENTS, EventCollector
+from ..kernel.collect import ALL_EVENTS
 from ..kernel.fastsax import parse_doc_flat
 from ..kernel.fastsax_np import parse_doc_flat_np
-from ..kernel.saxkernel import SaxParser
 from .rows import map_rows
 
 _EVENT_FIELDS = [
@@ -63,23 +62,18 @@ _EVENT_FIELDS = [
 _COLS = [f.name for f in _EVENT_FIELDS]
 
 
-def event_schema(id_fields: list[StructField]) -> StructType:
-    return StructType(list(id_fields) + _EVENT_FIELDS)
-
-
 def tokenize_events(
     df: DataFrame,
     html_col: str = "html",
     id_cols: tuple[str, ...] = ("url",),
     events: int = ALL_EVENTS,
-    chunk_size: int = 0,
     positions: bool = True,
 ) -> DataFrame:
-    """One output row per SAX event, flat columns (FIXTURES.md §2).
-
-    ``chunk_size`` > 0 streams each document through the parser in
-    fixed-size writes (event values are identical; used for streaming-
-    parity tests). The id columns are repeated per event row.
+    """One output row per SAX event, flat columns (FIXTURES.md §2); the
+    id columns are repeated per event row and a NULL html yields no
+    rows. Streaming-parity checks (the same document fed in fixed-size
+    writes) run on the kernel directly: ``kernel.collect.parse_events``
+    with ``chunk_size``.
 
     ``positions=False`` runs the positions-off kernel (fastsax_np):
     line/char columns come back 0, byte offsets stay exact, the parse
@@ -89,67 +83,15 @@ def tokenize_events(
     the position surface itself is oracle-checked by sax_positions,
     which keeps the default.
 
-    Output batches are built as pyarrow RecordBatches directly
-    (``mapInArrow``): the kernel's row tuples are transposed once and
-    handed to ``pa.array`` (C-level), skipping the round-1
-    pandas-DataFrame intermediate and its object-dtype inference +
-    pandas→Arrow reconversion on every batch.
+    The kernel's row tuples are the output rows: ``map_rows`` builds
+    the Arrow batch from them and repeats the ids in Arrow.
     """
-    import pyarrow as pa  # noqa: PLC0415
+    parse = parse_doc_flat if positions else parse_doc_flat_np
 
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
+    def tokenize(data):
+        return [] if data is None else parse(data, events)
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = event_schema(id_fields)
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    n_id = len(id_cols)
-    src = df.select(*id_cols, html_col)
-
-    def run(batches):
-        collector = EventCollector()
-        for rb in batches:
-            htmls = rb.column(n_id).to_pylist()
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            out_ids: list[list] = [[] for _ in range(n_id)]
-            out_rows: list[tuple] = []
-            for i, data in enumerate(htmls):
-                if data is None:
-                    continue
-                if isinstance(data, (bytearray, memoryview)):
-                    data = bytes(data)
-                if chunk_size and chunk_size < len(data):
-                    # streaming-parity mode: feed the FSM in fixed chunks
-                    collector.reset()
-                    parser = SaxParser(events=events, handler=collector)
-                    for o in range(0, len(data), chunk_size):
-                        parser.write(data[o : o + chunk_size])
-                    parser.end()
-                    rows = collector.rows
-                elif positions:
-                    # hot path: single-shot kernel w/ automatic FSM fallback
-                    rows = parse_doc_flat(data, events)
-                else:
-                    rows = parse_doc_flat_np(data, events)
-                if rows:
-                    for j in range(n_id):
-                        out_ids[j].extend([ids[j][i]] * len(rows))
-                    out_rows.extend(rows)
-            if out_rows:
-                cols = list(zip(*out_rows))
-            else:
-                cols = [[] for _ in _COLS]
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type) for j in range(n_id)
-            ] + [
-                pa.array(cols[k], type=arrow_fields[n_id + k].type)
-                for k in range(len(_COLS))
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(df, tokenize, [html_col], _EVENT_FIELDS, id_cols)
 
 
 def tokenize_nested(

@@ -6,7 +6,7 @@ crawl actually produces (WARC shards, see sources/warc.py). Layered
 exactly like the PDF leg (operators/pdf.py):
 
 * ``warc_to_pages``: (id…, warc:binary) → one row per response record
-  (url, warc_date, http_status, content_type, html) via ``mapInArrow``
+  (url, warc_date, http_status, content_type, html) via ``map_rows``
   — CPU-bound pure-Python record parsing scales with executor cores; a
   poison shard yields a single ``status='error:<Type>'`` row instead of
   killing the task (at crawl scale some shards WILL be truncated).
@@ -31,7 +31,6 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from .rows import map_rows
@@ -97,156 +96,84 @@ def warc_to_pages(
     chain id / number / total in the segment columns) for a downstream
     :func:`stitch_segments` pass instead of being counted and
     dropped."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    from pyspark.sql.pandas.types import to_arrow_type  # noqa: PLC0415
-
     from ..sources.warc import parse_warc_with_segments  # noqa: PLC0415
 
-    id_fields = [df.schema[c] for c in id_cols]
-    out_schema = StructType(list(id_fields) + WARC_PAGE_FIELDS)
-    arrow_fields = [
-        pa.field(f.name, to_arrow_type(f.dataType), f.nullable) for f in out_schema.fields
-    ]
-    arrow_schema = pa.schema(arrow_fields)
-    src = df.select(*id_cols, warc_col)
-    n_id = len(id_cols)
+    def shard_row(st, n_bad, n_seg):
+        # a row for the shard itself: no record fields, only the counts
+        return [(None,) * 5 + (st, n_bad, n_seg) + (None,) * 7]
 
-    def run(batches):
-        for rb in batches:
-            ids = [rb.column(j).to_pylist() for j in range(n_id)]
-            blobs = rb.column(n_id).to_pylist()
-            out_ids: list[list] = [[] for _ in range(n_id)]
-            urls, dates, statuses, ctypes, htmls, row_status, bad, seg = (
-                [], [], [], [], [], [], [], [],
+    def shard_rows(blob):
+        # one WARC_PAGE_FIELDS tuple per output row
+        try:
+            pages, n_skipped, leftovers = parse_warc_with_segments(
+                blob if blob is not None else b""
             )
-            seg_origin, seg_no, seg_total, seg_head, rev = [], [], [], [], []
-            outlinks_col, fetch_col = [], []
-
-            def emit(r, url, date, status, ctype, html, st, n_bad, n_seg,
-                     origin=None, number=None, total=None, is_head=None,
-                     revisit=None, outlinks=None, fetch_ms=None):
-                for j in range(n_id):
-                    out_ids[j].append(ids[j][r])
-                urls.append(url)
-                dates.append(date)
-                statuses.append(status)
-                ctypes.append(ctype)
-                htmls.append(html)
-                row_status.append(st)
-                bad.append(n_bad)
-                seg.append(n_seg)
-                seg_origin.append(origin)
-                seg_no.append(number)
-                seg_total.append(total)
-                seg_head.append(is_head)
-                rev.append(revisit)
-                outlinks_col.append(outlinks)
-                fetch_col.append(fetch_ms)
-
-            for r, blob in enumerate(blobs):
+        except Exception as e:  # wholly unreadable shard → one error row
+            return shard_row(f"error:{type(e).__name__}", 1, 0)
+        n_segmented = len(leftovers)
+        out = []
+        if emit_segments:
+            # unassembled segment records become stitchable rows
+            for h, body in leftovers:
+                is_cont = h.get("warc-type", "").lower() == "continuation"
+                origin = (
+                    h.get("warc-segment-origin-id", "")
+                    if is_cont
+                    else h.get("warc-record-id", "")
+                ) or None
                 try:
-                    pages, n_skipped, leftovers = parse_warc_with_segments(
-                        blob if blob is not None else b""
-                    )
-                except Exception as e:  # wholly unreadable shard → one error row
-                    emit(r, None, None, None, None, None,
-                         f"error:{type(e).__name__}", 1, 0)
-                    continue
-                n_segmented = len(leftovers)
-                if emit_segments:
-                    # unassembled segment records become stitchable rows
-                    for h, body in leftovers:
-                        is_cont = h.get("warc-type", "").lower() == "continuation"
-                        origin = (
-                            h.get("warc-segment-origin-id", "")
-                            if is_cont
-                            else h.get("warc-record-id", "")
-                        ) or None
-                        try:
-                            number = int(h.get("warc-segment-number", ""))
-                        except ValueError:
-                            number = None
-                        try:
-                            total = int(h["warc-segment-total-length"])
-                        except (KeyError, ValueError):
-                            total = None
-                        emit(
-                            r, h.get("warc-target-uri") or None,
-                            h.get("warc-date") or None, None, None, body,
-                            "segment", n_skipped, n_segmented,
-                            origin, number, total, not is_cont,
-                        )
-                if not pages and not (emit_segments and leftovers):
-                    # a shard that yields no pages must not vanish: an
-                    # auditor reconciling input shards against output
-                    # rows needs one row per shard regardless of why it
-                    # produced nothing (ADVICE r4 + round-5 review).
-                    # 'segmented' = only cross-shard segments, 'empty' =
-                    # records skipped, 'no_responses' = a valid shard of
-                    # warcinfo/request records only (metadata records
-                    # produce their own rows).
-                    if n_segmented and not n_skipped:
-                        st = "segmented"
-                    elif n_skipped:
-                        st = "empty"
-                    else:
-                        st = "no_responses"
-                    emit(r, None, None, None, None, None, st,
-                         n_skipped, n_segmented)
-                    continue
-                for p in pages:
-                    if p.metadata:
-                        emit(
-                            r, p.url, p.warc_date, None, p.content_type,
-                            None, "metadata", n_skipped, n_segmented,
-                            outlinks=" ".join(p.outlinks) or None,
-                            fetch_ms=p.fetch_ms,
-                        )
-                    elif p.revisit_of is not None:
-                        emit(
-                            r, p.url, p.warc_date, p.status, p.content_type,
-                            None, "revisit", n_skipped, n_segmented,
-                            revisit=p.revisit_of,
-                        )
-                    elif p.conversion:
-                        # WET-style converted payload: no HTTP envelope;
-                        # a §5.13-capped record keeps the truncation
-                        # signal exactly like the response path
-                        emit(
-                            r, p.url, p.warc_date, None, p.content_type,
-                            p.body,
-                            "conversion_truncated" if p.truncated else "conversion",
-                            n_skipped, n_segmented,
-                        )
-                    else:
-                        emit(
-                            r, p.url, p.warc_date, p.status, p.content_type,
-                            p.body, "truncated" if p.truncated else "ok",
-                            n_skipped, n_segmented,
-                        )
-            arrays = [
-                pa.array(out_ids[j], type=arrow_fields[j].type) for j in range(n_id)
-            ] + [
-                pa.array(urls, pa.string()),
-                pa.array(dates, pa.string()),
-                pa.array(statuses, pa.int32()),
-                pa.array(ctypes, pa.string()),
-                pa.array(htmls, pa.binary()),
-                pa.array(row_status, pa.string()),
-                pa.array(bad, pa.int32()),
-                pa.array(seg, pa.int32()),
-                pa.array(seg_origin, pa.string()),
-                pa.array(seg_no, pa.int64()),
-                pa.array(seg_total, pa.int64()),
-                pa.array(seg_head, pa.bool_()),
-                pa.array(rev, pa.string()),
-                pa.array(outlinks_col, pa.string()),
-                pa.array(fetch_col, pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+                    number = int(h.get("warc-segment-number", ""))
+                except ValueError:
+                    number = None
+                try:
+                    total = int(h["warc-segment-total-length"])
+                except (KeyError, ValueError):
+                    total = None
+                out.append((
+                    h.get("warc-target-uri") or None, h.get("warc-date") or None,
+                    None, None, body, "segment", n_skipped, n_segmented,
+                    origin, number, total, not is_cont, None, None, None,
+                ))
+        if not pages and not (emit_segments and leftovers):
+            # a shard that yields no pages must not vanish: an
+            # auditor reconciling input shards against output
+            # rows needs one row per shard regardless of why it
+            # produced nothing (ADVICE r4 + round-5 review).
+            # 'segmented' = only cross-shard segments, 'empty' =
+            # records skipped, 'no_responses' = a valid shard of
+            # warcinfo/request records only (metadata records
+            # produce their own rows).
+            if n_segmented and not n_skipped:
+                st = "segmented"
+            elif n_skipped:
+                st = "empty"
+            else:
+                st = "no_responses"
+            return shard_row(st, n_skipped, n_segmented)
+        for p in pages:
+            revisit = outlinks = fetch_ms = None
+            if p.metadata:
+                status, html, st = None, None, "metadata"
+                outlinks, fetch_ms = " ".join(p.outlinks) or None, p.fetch_ms
+            elif p.revisit_of is not None:
+                status, html, st, revisit = p.status, None, "revisit", p.revisit_of
+            elif p.conversion:
+                # WET-style converted payload: no HTTP envelope;
+                # a §5.13-capped record keeps the truncation
+                # signal exactly like the response path
+                status, html = None, p.body
+                st = "conversion_truncated" if p.truncated else "conversion"
+            else:
+                status, html = p.status, p.body
+                st = "truncated" if p.truncated else "ok"
+            out.append((
+                p.url, p.warc_date, status, p.content_type, html, st,
+                n_skipped, n_segmented, None, None, None, None,
+                revisit, outlinks, fetch_ms,
+            ))
+        return out
 
-    return src.mapInArrow(run, schema=out_schema)
+    return map_rows(df, shard_rows, [warc_col], WARC_PAGE_FIELDS, id_cols)
 
 
 def _render_blob_column(

@@ -41,6 +41,7 @@ from __future__ import annotations
 import time
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -76,10 +77,14 @@ def with_shard(df: DataFrame, num_shards: int, url_col: str = "url") -> DataFram
 
 
 def completed_shards(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Shards already marked ok in the lineage table (empty if none)."""
+    """Shards already marked ok in the lineage table (empty if the
+    table does not exist yet). Only a missing table counts as empty: an
+    unreadable one raises, since reading it as "no shard done" would
+    re-extract the whole corpus and append to a lineage that still
+    cannot be read."""
     try:
         lin = spark.read.parquet(lineage_path)
-    except Exception:
+    except AnalysisException:
         # a JVM Range, not a frame from a Python list: this frame is
         # evaluated up to three times per pass (count, the write's and
         # the read-back's anti-join), and a list-backed one runs a
@@ -305,23 +310,6 @@ def repartition_by_host(
     return hosted.repartition(num_partitions, "host")
 
 
-def host_stats_salted(pages: DataFrame, buckets: int = 16) -> DataFrame:
-    """Per-host page/byte counts via two-phase salted aggregation —
-    robust to mega-hosts that would otherwise hot-spot one reducer."""
-    hosted = pages.withColumn(
-        "host", F.regexp_extract("url", r"^https?://([^/]+)/", 1)
-    )
-    salted = salt_skewed_key(hosted, "host", buckets)
-    partial = salted.groupBy("salted_key", "host").agg(
-        F.count("*").alias("c"), F.sum(F.length("html")).alias("b")
-    )
-    return (
-        partial.groupBy("host")
-        .agg(F.sum("c").alias("n_pages"), F.sum("b").alias("n_bytes"))
-        .orderBy(F.col("n_pages").desc(), "host")
-    )
-
-
 def run_extraction_incremental(
     spark: SparkSession,
     pages: DataFrame,
@@ -364,8 +352,6 @@ def run_extraction_incremental(
     # Only a missing/empty output root counts as fresh. A transient
     # read failure (permissions, corrupt footer) on a root that DOES
     # hold data must propagate, not silently green-light an overwrite.
-    from pyspark.errors import AnalysisException  # noqa: PLC0415
-
     try:
         read_extracted(spark, out_path, table_format)
         has_stale = True

@@ -21,10 +21,8 @@ import hashlib
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -149,18 +147,3 @@ def synthesize_pages(
     ids = spark.range(start_id, start_id + n_pages, numPartitions=partitions)
     return map_rows(ids, lambda i: [build_page(i, scale)], ["id"], PAGES_SCHEMA.fields)
 
-
-def write_pages(spark: SparkSession, n_pages: int, path: str, partitions: int | None = None):
-    synthesize_pages(spark, n_pages, partitions).write.mode("overwrite").parquet(path)
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def with_url_shard(df: DataFrame, num_shards: int) -> DataFrame:
-    """Stable url-hash shard column — the partition/lineage key
-    (SURVEY.md §2.4: repartition by sha2(url))."""
-    return df.withColumn(
-        "shard", (F.abs(F.hash(F.sha2(F.col("url"), 256))) % F.lit(num_shards)).cast(LongType())
-    )

@@ -45,15 +45,6 @@ def sst_entry(doc_id: int, k: int) -> str:
     return f"Str {k} of {doc_id % 1000}"
 
 
-def cell_value(doc_id: int, r: int, c: int) -> tuple[str, str]:
-    """(kind, resolved value string) of the cell at 0-based (r, c)."""
-    if c == 0:
-        return "shared", sst_entry(doc_id, (doc_id + r) % 5)
-    if c == 1:
-        return "number", str((7 * doc_id + 13 * r) % 1000)
-    return "inline", f"inline {r}"
-
-
 def _sheet_xml(doc_id: int) -> bytes:
     n_rows, n_cols = xlsx_shape(doc_id)
     rows = []

@@ -1,14 +1,12 @@
 """Structured Streaming ingestion for the extraction pipeline.
 
 The batch operators are stateless per document, so they lift directly
-into streaming (mapInPandas is a stateless streaming transform):
+into streaming (mapInArrow is a stateless streaming transform):
 
-    pages stream → dedup latest-capture per url (watermark) → extract →
-    sink (parquet + checkpoint)
+    pages stream → extract → sink (parquet + checkpoint)
 
-The per-document parser state lives entirely inside the UDF — Spark's
-state store is only used for the url dedup, bounded by the watermark
-(SURVEY.md §2.4 streaming row).
+The per-document parser state lives entirely inside the UDF; no Spark
+state store is used (SURVEY.md §2.4 streaming row).
 """
 
 from __future__ import annotations
@@ -26,13 +24,6 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 16) -> Da
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
     )
-
-
-def dedup_latest_capture(pages: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Keep one event per url within the watermark window. Streaming
-    dropDuplicates keeps the first-seen row per key; late rows beyond
-    the watermark are dropped."""
-    return pages.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
 
 
 def read_warc_stream(spark: SparkSession, path: str, max_files: int = 16) -> DataFrame:
@@ -91,25 +82,3 @@ def extract_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def read_pdf_stream(spark: SparkSession, path: str, max_files: int = 64) -> DataFrame:
-    """Streaming PDF ingestion, the ``read_warc_stream`` twin: PDF
-    files landing in ``path`` become (doc_path, text, n_pages, n_runs,
-    status) rows continuously via the batch operator lifted unchanged
-    (operators/pdf.extract_pdf over a binaryFile source). Poison and
-    encrypted-beyond-scope documents flow to the sink as their
-    ``error:*`` status rows — a corrupt upload never wedges the
-    stream."""
-    from ..operators.pdf import extract_pdf  # noqa: PLC0415
-
-    # no pathGlobFilter, matching read_warc_stream: a case-sensitive
-    # "*.pdf" glob would silently skip REPORT.PDF with no accounting;
-    # non-PDF files surface as error:* rows instead of vanishing
-    docs = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("maxFilesPerTrigger", max_files)
-        .load(path)
-        .select(F.col("path").alias("doc_path"), F.col("content").alias("pdf"))
-    )
-    return extract_pdf(docs, pdf_col="pdf", id_cols=("doc_path",))

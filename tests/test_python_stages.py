@@ -1,19 +1,13 @@
 """Source guard: every Python stage under ``sax_wasm_spark/`` goes through
 ``operators/rows.map_rows``. ``mapInPandas`` is not called at all, and
-``mapInArrow`` only by the primitive itself and by the three operators
-whose batch-level specialisations the extraction benchmark times."""
+``mapInArrow`` only by the primitive itself."""
 
 import ast
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "sax_wasm_spark"
 
-MAP_IN_ARROW_ALLOWED = {
-    ("operators/rows.py", "map_rows"),
-    ("operators/extract.py", "extract_main_content"),
-    ("operators/tokenize.py", "tokenize_events"),
-    ("operators/warc.py", "warc_to_pages"),
-}
+MAP_IN_ARROW_ALLOWED = [("operators/rows.py", "map_rows")]
 
 
 def _batch_map_calls():
@@ -37,7 +31,6 @@ def test_no_map_in_pandas():
     assert found == [], found
 
 
-def test_map_in_arrow_only_in_primitive_and_benchmarked_operators():
-    found = {c[:2] for c in _batch_map_calls() if c[2] == "mapInArrow"}
-    assert found <= MAP_IN_ARROW_ALLOWED, sorted(found - MAP_IN_ARROW_ALLOWED)
-    assert ("operators/rows.py", "map_rows") in found
+def test_map_in_arrow_only_in_map_rows():
+    found = [c[:2] for c in _batch_map_calls() if c[2] == "mapInArrow"]
+    assert found == MAP_IN_ARROW_ALLOWED, found

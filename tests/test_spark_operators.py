@@ -7,12 +7,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from sax_wasm_spark.kernel.collect import EventCollector
+from sax_wasm_spark.kernel.collect import EventCollector, parse_events
 from sax_wasm_spark.kernel.saxkernel import SaxParser
 from sax_wasm_spark.operators.extract import extract_bytes, extract_main_content
 from sax_wasm_spark.operators.similarity import ann_lsh, knn_bruteforce
 from sax_wasm_spark.operators.tokenize import tokenize_events
-from sax_wasm_spark.plans.lineage import host_stats_salted, run_extraction, with_shard
+from sax_wasm_spark.plans.lineage import run_extraction, with_shard
 from sax_wasm_spark.sources.pages import build_page, synthesize_pages
 
 N_PAGES = 120
@@ -48,7 +48,8 @@ def test_tokenize_matches_kernel(spark, pages):
 
 
 def test_tokenize_chunked_values_match(spark, pages):
-    """64-byte chunked streaming mode produces identical event values.
+    """The distributed tokenizer's event values equal the streaming
+    kernel fed in 64-byte writes (kernel.collect.parse_events).
 
     OpenTagStart (event 5) is excluded: the reference re-emits it when a
     write boundary lands mid-tag-name (parser.rs:535-541 runs once per
@@ -56,11 +57,17 @@ def test_tokenize_chunked_values_match(spark, pages):
     (tools/diff_ref.py --sweep)."""
     sub = pages.limit(12)
     flat = tokenize_events(sub, id_cols=("url",))
-    chunked = tokenize_events(sub, id_cols=("url",), chunk_size=64)
     cols = ["url", "event", "name", "value", "attr_name", "attr_value", "self_closing"]
     a = sorted(map(tuple, flat.where(F.col("event") != 5).select(*cols).collect()))
-    b = sorted(map(tuple, chunked.where(F.col("event") != 5).select(*cols).collect()))
-    assert a == b
+    # FIELD_NAMES positions of cols[1:] in a kernel row
+    picks = (0, 2, 3, 4, 5, 7)
+    b = sorted(
+        (r.url, *(ev[k] for k in picks))
+        for r in sub.select("url", "html").collect()
+        for ev in parse_events(bytes(r.html), chunk_size=64)
+        if ev[0] != 5
+    )
+    assert len(a) > 0 and a == b
 
 
 def test_extract_matches_local(spark, pages):
@@ -74,7 +81,7 @@ def test_extract_matches_local(spark, pages):
 def test_extract_slices_large_batches(spark):
     """One partition of 300 pages reaches the extractor as a batch larger
     than SLICE_ROWS; every slice's rows come out once and unchanged."""
-    from sax_wasm_spark.operators.extract import SLICE_ROWS
+    from sax_wasm_spark.operators.rows import SLICE_ROWS
 
     n = 300
     assert n > 2 * SLICE_ROWS
@@ -121,24 +128,26 @@ def test_lineage_resume_idempotent(spark, pages, tmp_path):
     assert ok == r1["processed_shards"] + r2["processed_shards"]
 
 
+def test_lineage_unreadable_table_raises(spark, pages, tmp_path):
+    """A missing lineage table reads as no shard done; an unreadable one
+    raises, instead of reading as empty and re-extracting the whole
+    corpus into an output whose lineage still cannot be read."""
+    from sax_wasm_spark.plans.lineage import completed_shards
+
+    assert completed_shards(spark, str(tmp_path / "missing")).count() == 0
+    out = tmp_path / "out"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet") as exc:
+        run_extraction(spark, pages, str(out), num_shards=8, run_id="r1")
+    assert type(exc.value).__name__ != "AnalysisException"
+    assert not (out / "extracted").exists()
+
+
 def test_shard_determinism(spark, pages):
     a = with_shard(pages, 16).select("url", "shard").orderBy("url").collect()
     b = with_shard(pages.repartition(7), 16).select("url", "shard").orderBy("url").collect()
     assert a == b
-
-
-def test_salted_host_stats_match_plain(spark, pages):
-    salted = host_stats_salted(pages, buckets=8)
-    plain = (
-        pages.withColumn("host", F.regexp_extract("url", r"^https?://([^/]+)/", 1))
-        .groupBy("host")
-        .agg(F.count("*").alias("n_pages"), F.sum(F.length("html")).alias("n_bytes"))
-        .orderBy(F.col("n_pages").desc(), "host")
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    # skew realism: mega hosts dominate
-    top = salted.limit(1).collect()[0]
-    assert top.host.startswith("mega")
 
 
 def test_knn_and_ann(spark):
@@ -343,6 +352,31 @@ def test_map_rows(spark, error_col):
     assert (nullable["v"], nullable["status"]) == (error_col is not None, False)
     got = sorted(out.collect(), key=lambda r: (r.id, r.k if r.k is not None else -1))
     assert [tuple(r) for r in got] == expected
+
+    # one input batch (one partition, below maxRecordsPerBatch) spanning
+    # three slices: the ids are repeated across slice boundaries by an
+    # Arrow take, keeping their types and NULLs
+    from sax_wasm_spark.operators.rows import SLICE_ROWS
+
+    n_rows = 2 * SLICE_ROWS + 44
+    big = spark.range(0, n_rows, numPartitions=1).select(
+        "id",
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.concat(F.lit("t"), F.col("id").cast("string")))
+        .alias("tag"),
+        (F.col("id") % 4).cast("int").alias("n"),
+    )
+    out = map_rows(big, fan, ["n"], out_ddl, ["id", "tag"], error_col=error_col)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields[:2]] == [
+        ("id", "bigint", False),
+        ("tag", "string", True),
+    ]
+    expected = sorted(
+        (i, None if i % 7 == 0 else f"t{i}", k, f"r{k}", "ok")
+        for i in range(n_rows)
+        for k in range(i % 4)
+    )
+    assert sorted(tuple(r) for r in out.collect()) == expected
 
 
 def test_multimodal_resize_and_frames(spark):
@@ -616,41 +650,6 @@ def test_streaming_extraction(spark, pages, tmp_path):
     assert stream == batch
 
 
-def test_streaming_watermark_dedup(spark, pages, tmp_path):
-    import datetime
-
-    from sax_wasm_spark.streaming.stream import dedup_latest_capture
-
-    in_path = str(tmp_path / "dup_pages")
-    out_path = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    base = pages.limit(20)
-    dup = base.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 MINUTE")
-    )
-    base.unionByName(dup).write.mode("overwrite").parquet(in_path)
-
-    from sax_wasm_spark.sources.pages import PAGES_SCHEMA
-
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA).parquet(in_path)
-    )
-    q = (
-        dedup_latest_capture(stream, "10 minutes")
-        .select("url")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_path)
-    assert got.count() == 20  # one row per url despite duplicates
-    assert got.select("url").distinct().count() == 20
-
-
 def test_stateful_streaming_host_totals(spark, pages, tmp_path):
     """applyInPandasWithState accumulates per-host counters across
     micro-batches (maxFilesPerTrigger=1 forces multiple batches)."""
@@ -780,8 +779,8 @@ def test_pipeline_robots_gate_blocks_and_counts(spark, pages, tmp_path):
 
 def test_snapshot_diff_classification(spark):
     """operators/delta.snapshot_diff: the four change classes on a
-    hand-built pair of snapshots, plus the stats summary."""
-    from sax_wasm_spark.operators.delta import snapshot_diff, snapshot_diff_stats
+    hand-built pair of snapshots."""
+    from sax_wasm_spark.operators.delta import snapshot_diff
 
     old = spark.createDataFrame(
         [("u1", "same"), ("u2", "before"), ("u3", "gone")],
@@ -802,8 +801,6 @@ def test_snapshot_diff_classification(spark):
     rows = diff.collect()
     by_url = {r.url: r for r in rows}
     assert by_url["u3"].new_hash is None and by_url["u4"].old_hash is None
-    stats = {r.change: r.n for r in snapshot_diff_stats(diff).collect()}
-    assert stats == {"added": 1, "changed": 1, "deleted": 1, "unchanged": 1}
     # the join must carry hashes, not texts: plan projects md5 before
     # the exchange
     plan = diff._sc._jvm.PythonSQLUtils.explainString(
@@ -992,41 +989,6 @@ def test_incremental_edge_cases(spark, tmp_path):
     )
     assert bad == 0
     assert got3.select("shard").distinct().count() <= 7
-
-
-def test_streaming_pdf_ingestion(spark, tmp_path):
-    """PDF files landing in a directory stream into extracted-text rows
-    via the binaryFile source + the batch operator lifted unchanged —
-    incl. an encrypted document and a poison file, which must surface
-    as rows rather than wedging the stream."""
-    from sax_wasm_spark.sources.pdfgen import build_pdf
-    from sax_wasm_spark.streaming.stream import read_pdf_stream
-
-    in_dir = tmp_path / "pdfs"
-    in_dir.mkdir()
-    texts = {}
-    for i, variant in enumerate((0, 2, 9, 10)):  # incl. RC4 + AES docs
-        t = f"streamed document {i} body text"
-        texts[f"doc-{i}.pdf"] = t
-        (in_dir / f"doc-{i}.pdf").write_bytes(build_pdf(t, variant=variant))
-    (in_dir / "poison.pdf").write_bytes(b"%PDF-1.4 garbage with no objects")
-
-    out = str(tmp_path / "out")
-    q = (
-        read_pdf_stream(spark, str(in_dir))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_path.rsplit("/", 1)[-1]: r for r in spark.read.parquet(out).collect()}
-    assert len(got) == 5
-    for name, want in texts.items():
-        assert got[name].status == "ok" and got[name].text == want, name
-    assert got["poison.pdf"].status.startswith("error:")
 
 
 def test_head_metadata_pairing_and_edge_cases(spark):

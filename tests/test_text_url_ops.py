@@ -241,16 +241,29 @@ def test_remove_boilerplate_lines_df_counts_docs_not_occurrences(spark):
 
 
 def test_hash_sampling_is_partitioning_invariant(spark):
-    from sax_wasm_spark.functions.sampling import sample_fraction
+    from pyspark.sql import functions as F
 
-    d = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    a = {r.doc_id for r in sample_fraction(d.repartition(1), 0.3, "doc_id").collect()}
-    b = {r.doc_id for r in sample_fraction(d.repartition(16), 0.3, "doc_id").collect()}
+    from sax_wasm_spark.functions.sampling import GRANULARITY, hash_bucket, mix_corpus
+
+    d = (
+        spark.range(0, 2000)
+        .withColumnRenamed("id", "doc_id")
+        .withColumn("source", F.lit("s"))
+    )
+
+    def sample(df, **kw):
+        return {r.doc_id for r in mix_corpus(df, {"s": 0.3}, **kw).collect()}
+
+    a = sample(d.repartition(1))
+    b = sample(d.repartition(16))
     assert a == b
+    # the kept set is exactly the hash gate, whatever the partitioning
+    gate = d.where(hash_bucket("doc_id", "mix") < int(0.3 * GRANULARITY))
+    assert {r.doc_id for r in gate.collect()} == a
     # rate lands near the target on 2000 keys
     assert 0.25 < len(a) / 2000 < 0.35
     # different seeds give different (deterministic) samples
-    c = {r.doc_id for r in sample_fraction(d, 0.3, "doc_id", seed="other").collect()}
+    c = sample(d, seed="other")
     assert c != a
 
 
