@@ -327,12 +327,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     return ssss, raw
 
 
-def _fdct_quant(block: np.ndarray, quant: np.ndarray) -> np.ndarray:
-    coeffs = _C @ (block - 128.0) @ _CT
-    q = np.round(coeffs / quant.reshape(8, 8)).astype(np.int64)
-    return q.reshape(-1)[_ZIGZAG]
-
-
 def _pad_to(plane: np.ndarray, bh: int, bw: int) -> np.ndarray:
     h, w = plane.shape
     ph = (bh - h % bh) % bh
@@ -569,14 +563,6 @@ class JpegImage:
     adobe_transform: int | None  # APP14 byte, None when absent
     jfif: bool
     restart_interval: int
-
-
-def _idct_dequant(
-    zz: np.ndarray, quant: np.ndarray
-) -> np.ndarray:
-    coeffs = (zz * quant)[_UNZIGZAG].reshape(8, 8).astype(np.float64)
-    block = _CT @ coeffs @ _C + 128.0
-    return block
 
 
 def decode_jpeg(data: bytes, max_pixels: int = 1 << 24) -> JpegImage:

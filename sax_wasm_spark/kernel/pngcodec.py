@@ -66,16 +66,6 @@ class PngImage:
     color_type: int  # the wire's IHDR color type
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
     """Scanline unfilter → (h, stride) uint8 of reconstructed bytes.
     None/Up are fully vectorized; Sub/Average/Paeth carry a sequential

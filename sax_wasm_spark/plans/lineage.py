@@ -12,28 +12,28 @@ Design (SURVEY.md §2.4 checkpoint row):
   replaces exactly its own directory (idempotent under retry).
 - After a successful write, one lineage row per completed shard
   (shard, status, n_docs, n_chars, n_events, run_id, finished_at) is
-  appended to ``<out>/lineage``. On resume, completed shards are
-  anti-joined away (broadcast — the lineage table is tiny) and only the
-  remainder is processed.
+  appended to ``<out>/lineage``. On resume, the resume set (the shards
+  marked ok) is read once to the driver — the lineage table is tiny —
+  and the pass filters the rest with one ``shard NOT IN (...)``
+  predicate; when every shard is done the pass returns without a job.
 
 Stage layout (``extract_shards``, shared by both writers): the
 extractor runs inside the stage that produces its input, and only its
 output is shuffled by shard for the write. In ``run_extraction`` that
-is the scan stage (pages scan + broadcast anti-join), so a pass runs
+is the scan stage (pages scan + resume filter), so a pass runs
 exactly one Python stage, whose task count follows the input splits
 (which Spark sizes by bytes, ``spark.sql.files.maxPartitionBytes``),
 not ``num_shards``. Each Python task pays a fixed start cost before its
 first row (0.1-0.5 s measured on a 4-core VM, against ~0.6 ms of
 kernel time per page), so a fixed-count shuffle in front of the
 extractor would let that cost, not the kernel, set the pass time. The
-lineage frames (the empty ``completed_shards`` frame and the appended
-lineage rows) are built on the JVM (``Range`` and ``LocalTableScan``),
-so they start no Python task either.
+appended lineage rows are built on the JVM (``LocalTableScan``), so
+they start no Python task either.
 
 At 10^12 documents the same layout holds: shards are the retry ledger
-(thousands of rows), not the data; the anti-join is a broadcast hash
-join against the pages scan, and the extract stage is embarrassingly
-parallel over the scan splits.
+(thousands of rows), not the data; the resume filter is a hash-set
+lookup per scanned row, on the read-back a partition prune, and the
+extract stage is embarrassingly parallel over the scan splits.
 """
 
 from __future__ import annotations
@@ -76,21 +76,35 @@ def with_shard(df: DataFrame, num_shards: int, url_col: str = "url") -> DataFram
     )
 
 
-def completed_shards(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Shards already marked ok in the lineage table (empty if the
-    table does not exist yet). Only a missing table counts as empty: an
-    unreadable one raises, since reading it as "no shard done" would
-    re-extract the whole corpus and append to a lineage that still
-    cannot be read."""
+def with_html_hash(df: DataFrame) -> DataFrame:
+    """The raw-html md5 a refresh keys its unchanged-page test on. NULL
+    html extracts as b"" (extract_bytes), so it hashes as b"" too."""
+    return df.withColumn("html_hash", F.md5(F.coalesce(F.col("html"), F.lit(b""))))
+
+
+def completed_shards(spark: SparkSession, lineage_path: str) -> frozenset[int]:
+    """Shards already marked ok in the lineage table, read once to the
+    driver (empty if the table does not exist yet). Only a missing
+    table counts as empty: an unreadable one raises, since reading it
+    as "no shard done" would re-extract the whole corpus and append to
+    a lineage that still cannot be read."""
     try:
-        lin = spark.read.parquet(lineage_path)
+        # the known schema spares a schema-inference job: the read is
+        # the one job of a resume pass whose shards are all done
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     except AnalysisException:
-        # a JVM Range, not a frame from a Python list: this frame is
-        # evaluated up to three times per pass (count, the write's and
-        # the read-back's anti-join), and a list-backed one runs a
-        # Python task each time
-        return spark.range(0).select(F.col("id").cast("int").alias("shard"))
-    return lin.where(F.col("status") == "ok").select("shard").distinct()
+        return frozenset()
+    return frozenset(r.shard for r in lin.where(F.col("status") == "ok").select("shard").collect())
+
+
+def not_done(df: DataFrame, done: frozenset[int]) -> DataFrame:
+    """``df`` without the rows of the ``done`` shards. One SQL
+    ``NOT IN`` string, so one JVM call however many shards are done
+    (``Column.isin`` makes one per literal); on a ``shard``-partitioned
+    read it prunes partitions."""
+    if not done:
+        return df
+    return df.where(F.expr(f"shard NOT IN ({','.join(map(str, sorted(done)))})"))
 
 
 def write_extracted_partitioned(
@@ -222,14 +236,12 @@ def run_extraction(
     out_path: str,
     num_shards: int = 64,
     run_id: str = "run",
-    fail_shards: set[int] | None = None,
     table_format: str = "parquet",
     lineage_path: str | None = None,
 ) -> dict:
-    """One resumable pass: process every shard not yet marked ok.
+    """One resumable pass: process every shard not yet marked ok; when
+    every shard is, return after the lineage read.
 
-    ``fail_shards`` is a test hook: those shards are skipped (simulating
-    task failure) and get no lineage row, so the next run picks them up.
     ``lineage_path`` defaults to ``<out_path>/lineage``; pass it
     explicitly when ``table_format='iceberg'`` (``out_path`` is then a
     table identifier, not a filesystem root).
@@ -237,21 +249,14 @@ def run_extraction(
     """
     if lineage_path is None:
         lineage_path = f"{out_path}/lineage"
-    sharded = with_shard(pages, num_shards)
     done = completed_shards(spark, lineage_path)
-    n_done = done.count()
-    todo = sharded.join(F.broadcast(done), "shard", "left_anti")
-    if fail_shards:
-        todo = todo.where(~F.col("shard").isin(*fail_shards))
+    if done.issuperset(range(num_shards)):
+        return {"processed_shards": 0, "skipped_shards": len(done), "n_docs": 0}
 
     # extract in the scan stage, then shuffle the extracted rows by
-    # shard (extract_shards); NULL html extracts as b"" (extract_bytes),
-    # so it hashes as b"" too — the refresh must see the same hash
-    extracted = extract_shards(
-        todo.withColumn("html_hash", F.md5(F.coalesce(F.col("html"), F.lit(b"")))),
-        num_shards,
-    )
-
+    # shard (extract_shards)
+    todo = not_done(with_shard(pages, num_shards), done)
+    extracted = extract_shards(with_html_hash(todo), num_shards)
     write_extracted_partitioned(extracted, out_path, table_format)
 
     # lineage rows from the PERSISTED data: read the parquet just
@@ -261,13 +266,11 @@ def run_extraction(
     # stage) a second time per run (VERDICT r1 item 4); reading the
     # written files back costs one cheap columnar scan and also makes
     # the lineage counts describe what is actually on disk.
-    written = read_extracted(spark, out_path, table_format).join(
-        F.broadcast(done), "shard", "left_anti"
-    )
+    written = not_done(read_extracted(spark, out_path, table_format), done)
     rows = _append_lineage(spark, written, lineage_path, run_id)
     return {
         "processed_shards": len(rows),
-        "skipped_shards": n_done,
+        "skipped_shards": len(done),
         "n_docs": sum(r.n_docs for r in rows),
     }
 
@@ -354,10 +357,9 @@ def run_extraction_incremental(
     # hold data must propagate, not silently green-light an overwrite.
     try:
         read_extracted(spark, out_path, table_format)
-        has_stale = True
     except AnalysisException:
-        has_stale = False
-    if has_stale:
+        pass
+    else:
         raise ValueError(
             f"out_path {out_path!r} already holds extracted data: dynamic "
             "partition overwrite would keep stale shards (resurrecting "
@@ -370,9 +372,7 @@ def run_extraction_incremental(
         # classifies as changed below (eqNullSafe never matches NULL
         # against a real hash)
         prev = prev.withColumn("html_hash", F.lit(None).cast("string"))
-    hashed = with_shard(pages, num_shards).withColumn(
-        "html_hash", F.md5(F.coalesce(F.col("html"), F.lit(b"")))
-    )
+    hashed = with_html_hash(with_shard(pages, num_shards))
 
     # per-url classification over the tiny (url, hash) projections:
     # reuse requires the url unique in BOTH snapshots and hash-equal
@@ -383,17 +383,13 @@ def run_extraction_incremental(
         F.count("*").alias("_n_new"), F.min("html_hash").alias("_new_hash")
     )
     cls = new_u.join(prev_u, "url", "full_outer").persist()
-    n_reused = cls.where(
-        (F.col("_n_prev") == 1)
-        & (F.col("_n_new") == 1)
-        & F.col("_new_hash").eqNullSafe(F.col("_prev_hash"))
-    ).count()
-    n_deleted = cls.where(F.col("_n_new").isNull()).count()
     unchanged_urls = cls.where(
         (F.col("_n_prev") == 1)
         & (F.col("_n_new") == 1)
         & F.col("_new_hash").eqNullSafe(F.col("_prev_hash"))
     ).select("url")
+    n_reused = unchanged_urls.count()
+    n_deleted = cls.where(F.col("_n_new").isNull()).count()
 
     extracted_new = extract_shards(
         hashed.join(unchanged_urls, "url", "left_anti"), num_shards

@@ -3,23 +3,31 @@ on must be visible in `explain` output, not just intended.
 
 - column pruning: the extraction scan must read ONLY (url, html);
 - predicate pushdown: filters reach the parquet scan (PushedFilters);
-- broadcast joins: small dims and the lineage anti-join broadcast;
+- broadcast joins: small dims broadcast;
 - partial aggregation: map-side combine before the shuffle;
 - whole-stage codegen spans exist on the relational queries;
 - one Python stage per extraction pass: the extractor sits in the scan
-  stage below the shard shuffle, and the lineage frames are JVM scans.
+  stage below the shard shuffle, and the lineage rows are a JVM scan;
+- resume set read once to the driver: a fully-done resume runs only
+  the lineage read, and a partial resume's read-back prunes the done
+  shards' partitions.
 """
 
 import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from sax_wasm_spark.operators.extract import extract_main_content
+from sax_wasm_spark.plans import lineage
 from sax_wasm_spark.plans.lineage import (
     completed_shards,
     extract_shards,
     lineage_rows,
+    not_done,
+    run_extraction,
+    with_html_hash,
     with_shard,
 )
 from sax_wasm_spark.plans.queries import (
@@ -59,27 +67,21 @@ def tree_of(df) -> str:
 
 def test_extraction_python_stage_sits_below_shard_shuffle(spark, pages_path, tmp_path):
     """The extraction pass runs ONE Python stage, inside the scan stage:
-    the extractor reads the anti-joined pages unshuffled and only its
+    the extractor reads the resume-filtered pages unshuffled and only its
     output crosses the shard shuffle. A shuffle in front of it would make
     the number of Python tasks follow the shuffle's partition count
     (num_shards // 4) instead of the input splits."""
     pages = spark.read.parquet(pages_path)
     done = completed_shards(spark, str(tmp_path / "no_lineage"))
-    todo = with_shard(pages, 64).join(F.broadcast(done), "shard", "left_anti")
-    tree = tree_of(
-        extract_shards(todo.withColumn("html_hash", F.md5("html")), 64)
-    ).splitlines()
+    assert done == frozenset()
+    todo = not_done(with_shard(pages, 64), done | {3})
+    tree = tree_of(extract_shards(with_html_hash(todo), 64)).splitlines()
     py = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
     assert len(py) == 1, "\n".join(tree)
     shuffles = [i for i, ln in enumerate(tree) if "Exchange hashpartitioning(" in ln]
     assert len(shuffles) == 1, "\n".join(tree)
     assert "Exchange hashpartitioning(shard" in tree[shuffles[0]], "\n".join(tree)
     assert shuffles[0] < py[0], "\n".join(tree)  # the shuffle is above the extractor
-
-
-def test_empty_completed_shards_is_a_jvm_scan(spark, tmp_path):
-    plan = plan_of(completed_shards(spark, str(tmp_path / "no_lineage")))
-    assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_lineage_rows_are_a_jvm_scan(spark):
@@ -94,6 +96,72 @@ def test_lineage_rows_are_a_jvm_scan(spark):
     assert "Scan ExistingRDD" not in plan, plan
     assert "LocalTableScan" in plan, plan
     assert [tuple(r) for r in df.collect()] == [tuple(r) for r in rows]
+
+
+def jobs_of(spark, group, fn):
+    """(fn's result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_extraction_pass_job_counts(spark, tmp_path):
+    """A fresh 64-shard pass runs 7 jobs: the extract stage and the
+    write, the read-back's schema and partition listing, the lineage
+    aggregate and its append. A resume pass whose shards are all done
+    runs only the lineage read: no pages scan, write or read-back."""
+    synthesize_pages(spark, 400, partitions=2).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    assert with_shard(pages, 64).select("shard").distinct().count() == 64
+    out = str(tmp_path / "out")
+    fresh, n_fresh = jobs_of(spark, "fresh", lambda: run_extraction(spark, pages, out, 64, "r1"))
+    done, n_done = jobs_of(spark, "done", lambda: run_extraction(spark, pages, out, 64, "r2"))
+    assert fresh["processed_shards"] == 64
+    assert done == {"processed_shards": 0, "skipped_shards": 64, "n_docs": 0}
+    assert (n_fresh, n_done) == (7, 1)
+
+
+def test_partial_resume_read_back_prunes_done_shards(spark, pages_path, tmp_path, monkeypatch):
+    """The read-back of a partial resume reads only the shards this pass
+    wrote: the resume filter reaches the scan as a partition filter on
+    ``shard``, so the done shards' files are never opened."""
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out")
+    first = with_shard(pages, 64).where(F.col("shard") < 32).drop("shard")
+    run_extraction(spark, first, out, 64, "r1")
+    done = completed_shards(spark, f"{out}/lineage")
+    assert done and all(s < 32 for s in done)
+
+    read_backs = []
+    append = lineage._append_lineage
+
+    def spy(spark_, written, *args):
+        read_backs.append(written)
+        return append(spark_, written, *args)
+
+    monkeypatch.setattr(lineage, "_append_lineage", spy)
+    rows = run_extraction(spark, pages, out, 64, "r2")
+    assert rows["skipped_shards"] == len(done) and rows["processed_shards"] > 0
+    (written,) = read_backs
+    m = re.search(r"PartitionFilters: \[NOT shard#\d+ INSET ([\d, ]+)\]", plan_of(written))
+    assert m, plan_of(written)
+    assert {int(s) for s in m.group(1).split(",")} == done
+
+
+def test_resume_filter_builds_fast_at_16k_shards(spark, pages_path):
+    """The resume filter is one SQL string, one JVM call: building and
+    planning it for 16,384 done shards takes ~1 s. ``Column.isin``
+    makes one call per literal and takes ~15 s."""
+    pages = spark.read.parquet(pages_path)
+    t0 = time.perf_counter()
+    todo = not_done(with_shard(pages, 16384), frozenset(range(16384)))
+    todo._jdf.queryExecution().executedPlan()
+    assert time.perf_counter() - t0 < 2.0
 
 
 def test_filter_pushdown_reaches_scan(spark, pages_path):
