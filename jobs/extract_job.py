@@ -19,9 +19,10 @@ Cluster sizing guidance (10^12 docs): the extractor runs in the scan
 stage, so its Python tasks follow the input splits
 (spark.sql.files.maxPartitionBytes sizes them by bytes), not
 --num-shards. --num-shards sets the output files and the retry units:
-one shard ≈ one retry unit and one output file, written by
-num-shards / 4 write tasks after the shard shuffle; pick num-shards ≈
-4-16x the executor count. Executor memory only needs one Arrow batch +
+one shard ≈ one retry unit and one output file. The shard shuffle is
+hashed by column only, so AQE coalesces the write tasks by output
+bytes (spark.sql.shuffle.partitions is their upper bound), whatever
+--num-shards is; pick num-shards ≈ 4-16x the executor count. Executor memory only needs one Arrow batch +
 one document's parser state per core
 (spark.sql.execution.arrow.maxRecordsPerBatch bounds the batch).
 """

@@ -10,12 +10,21 @@ Design (SURVEY.md §2.4 checkpoint row):
 - Extracted output is written parquet-partitioned by ``shard`` with
   dynamic partition overwrite, so re-processing a shard atomically
   replaces exactly its own directory (idempotent under retry).
-- After a successful write, one lineage row per completed shard
+- After a successful write, one lineage row per shard the pass covered
   (shard, status, n_docs, n_chars, n_events, run_id, finished_at) is
-  appended to ``<out>/lineage``. On resume, the resume set (the shards
+  appended to ``<out>/lineage``; a covered shard that holds no page
+  gets a row with zero counts. On resume, the resume set (the shards
   marked ok) is read once to the driver — the lineage table is tiny —
   and the pass filters the rest with one ``shard NOT IN (...)``
-  predicate; when every shard is done the pass returns without a job.
+  predicate; when every shard is done the pass returns after that one
+  read, on a sparse corpus too. A completed pass thus vouches for every
+  shard it covered: resume with the same pages, since a shard whose
+  pages were missing from that pass is recorded as empty. To re-extract
+  a shard, drop its lineage rows.
+- The output is read back with its declared schema
+  (``EXTRACTED_SCHEMA``) and with partition discovery on the driver,
+  so a read starts no Spark job: no footer read to infer the schema,
+  no listing job over the ``shard=`` directories.
 
 Stage layout (``extract_shards``, shared by both writers): the
 extractor runs inside the stage that produces its input, and only its
@@ -27,8 +36,12 @@ not ``num_shards``. Each Python task pays a fixed start cost before its
 first row (0.1-0.5 s measured on a 4-core VM, against ~0.6 ms of
 kernel time per page), so a fixed-count shuffle in front of the
 extractor would let that cost, not the kernel, set the pass time. The
-appended lineage rows are built on the JVM (``LocalTableScan``), so
-they start no Python task either.
+shard shuffle behind it is a column-only ``repartition("shard")``:
+AQE coalesces its ``spark.sql.shuffle.partitions`` partitions by
+bytes, so the write tasks follow the output size, not ``num_shards``,
+and each shard still lands in one task, hence one file. The appended
+lineage rows are built on the JVM (``LocalTableScan``), so they start
+no Python task either.
 
 At 10^12 documents the same layout holds: shards are the retry ledger
 (thousands of rows), not the data; the resume filter is a hash-set
@@ -39,10 +52,11 @@ extract stage is embarrassingly parallel over the scan splits.
 from __future__ import annotations
 
 import time
+from collections.abc import Iterable
 
 import pyarrow as pa
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -53,7 +67,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.extract import extract_main_content
+from ..operators.extract import EXTRACT_SCHEMA, extract_main_content
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -66,6 +80,20 @@ LINEAGE_SCHEMA = StructType(
         StructField("finished_at", LongType(), False),
     ]
 )
+
+# The written output (extract_shards): the extractor's columns, the
+# raw-html hash the next refresh keys on, and the partition column last,
+# where a partitioned read puts it. A snapshot written before html_hash
+# existed reads it as NULL.
+EXTRACTED_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields
+    + [StructField("html_hash", StringType()), StructField("shard", IntegerType())]
+)
+
+# Above this many directories at one level, partition discovery lists
+# them in a Spark job (one task per directory; default 32, so every
+# read of a 64-shard root started a 64-task job).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def with_shard(df: DataFrame, num_shards: int, url_col: str = "url") -> DataFrame:
@@ -162,20 +190,37 @@ def write_extracted_partitioned(
 
 
 def read_extracted(spark: SparkSession, out_path: str, table_format: str = "parquet") -> DataFrame:
+    """The extracted output as one frame. The parquet read declares
+    ``EXTRACTED_SCHEMA`` (no footer job to infer it) and lists the
+    ``shard=`` directories on the driver (no listing job), so it starts
+    no Spark job; the file index is built here, at read time, so the
+    listing setting is restored before the frame is used. A missing
+    root raises ``AnalysisException``; an empty one reads as no rows."""
     if table_format == "parquet":
-        return spark.read.parquet(f"{out_path}/extracted")
+        prev = spark.conf.get(_LISTING_THRESHOLD, None)
+        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+        try:
+            return spark.read.schema(EXTRACTED_SCHEMA).parquet(f"{out_path}/extracted")
+        finally:
+            if prev is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, prev)
     if table_format == "iceberg":
         return spark.read.table(f"{out_path}_extracted")
     raise ValueError(f"unknown table_format {table_format!r}")
 
 
 def _append_lineage(
-    spark: SparkSession, written: DataFrame, lineage_path: str, run_id: str
+    spark: SparkSession, written: DataFrame, lineage_path: str, run_id: str, covered: Iterable[int]
 ) -> list:
     """Aggregate per-shard stats over the PERSISTED output and append
-    them to the lineage table; returns the collected rows (tiny — one
-    per shard). Shared by run_extraction and the incremental refresh
-    so the two writers cannot drift."""
+    them to the lineage table, plus a zero-count ok row for each
+    ``covered`` shard (one the pass scanned) that holds no row, so a
+    resume of a sparse corpus finds every shard done. Returns the rows
+    (tiny — one per shard). Shared by run_extraction and the
+    incremental refresh so the two writers cannot drift."""
+    finished_at = int(time.time() * 1000)
     stats = (
         written.groupBy("shard")
         .agg(
@@ -185,13 +230,19 @@ def _append_lineage(
         )
         .withColumn("status", F.lit("ok"))
         .withColumn("run_id", F.lit(run_id))
-        .withColumn("finished_at", F.lit(int(time.time() * 1000)))
+        .withColumn("finished_at", F.lit(finished_at))
         .select(
             "shard", "status", "n_docs", "n_chars", "n_events", "run_id",
             "finished_at",
         )
     )
     rows = stats.collect()
+    populated = {r.shard for r in rows}
+    rows += [
+        Row(shard=s, status="ok", n_docs=0, n_chars=0, n_events=0, run_id=run_id,
+            finished_at=finished_at)
+        for s in sorted(set(covered) - populated)
+    ]
     if rows:
         lineage_rows(spark, rows).coalesce(1).write.mode("append").parquet(
             lineage_path
@@ -209,14 +260,16 @@ def lineage_rows(spark: SparkSession, rows: list) -> DataFrame:
     return spark.createDataFrame(table, LINEAGE_SCHEMA)
 
 
-def extract_shards(todo: DataFrame, num_shards: int) -> DataFrame:
+def extract_shards(todo: DataFrame) -> DataFrame:
     """Extract ``todo`` (shard, url, html, html_hash) inside the stage
     that produced it, then shuffle the extracted rows by shard for the
     write (the stage layout in the module docstring).
 
-    The shuffle groups each shard into one of ``num_shards // 4`` write
-    partitions, so each shard's directory gets one file and the shuffle
-    key matches the lineage unit. shard and the raw-html hash ride
+    The column-only shuffle hashes each shard into one of
+    ``spark.sql.shuffle.partitions`` partitions, which AQE coalesces by
+    bytes into the write tasks; a shard never spans two tasks, so its
+    directory gets one file, and the shuffle key matches the lineage
+    unit. shard and the raw-html hash ride
     through the extractor row-aligned (passthrough): the shard
     recompute (sha2 + xxhash per row) is saved, and html_hash is what
     the NEXT refresh keys its unchanged-page classification on
@@ -227,7 +280,7 @@ def extract_shards(todo: DataFrame, num_shards: int) -> DataFrame:
         "url",
         passthrough=("shard", "html_hash"),
     )
-    return extracted.repartition(max(num_shards // 4, 1), "shard")
+    return extracted.repartition("shard")
 
 
 def run_extraction(
@@ -256,7 +309,7 @@ def run_extraction(
     # extract in the scan stage, then shuffle the extracted rows by
     # shard (extract_shards)
     todo = not_done(with_shard(pages, num_shards), done)
-    extracted = extract_shards(with_html_hash(todo), num_shards)
+    extracted = extract_shards(with_html_hash(todo))
     write_extracted_partitioned(extracted, out_path, table_format)
 
     # lineage rows from the PERSISTED data: read the parquet just
@@ -267,7 +320,8 @@ def run_extraction(
     # written files back costs one cheap columnar scan and also makes
     # the lineage counts describe what is actually on disk.
     written = not_done(read_extracted(spark, out_path, table_format), done)
-    rows = _append_lineage(spark, written, lineage_path, run_id)
+    covered = set(range(num_shards)) - done
+    rows = _append_lineage(spark, written, lineage_path, run_id, covered)
     return {
         "processed_shards": len(rows),
         "skipped_shards": len(done),
@@ -352,26 +406,25 @@ def run_extraction_incremental(
             "differ from previous_path (the reused rows are lazily read "
             "from it during the write)"
         )
-    # Only a missing/empty output root counts as fresh. A transient
-    # read failure (permissions, corrupt footer) on a root that DOES
-    # hold data must propagate, not silently green-light an overwrite.
+    # Only a missing or empty output root counts as fresh: an empty one
+    # holds no shard that the overwrite could keep stale. A read failure
+    # (permissions, corrupt footer) on a root that DOES hold data
+    # propagates, never green-lighting an overwrite.
     try:
-        read_extracted(spark, out_path, table_format)
+        fresh = read_extracted(spark, out_path, table_format).isEmpty()
     except AnalysisException:
-        pass
-    else:
+        fresh = True
+    if not fresh:
         raise ValueError(
             f"out_path {out_path!r} already holds extracted data: dynamic "
             "partition overwrite would keep stale shards (resurrecting "
             "deleted urls) — refresh into a fresh snapshot root"
         )
 
+    # a snapshot written before html_hash existed reads it as NULL, so
+    # all its rows classify as changed below (eqNullSafe never matches
+    # NULL against a real hash)
     prev = read_extracted(spark, previous_path, table_format)
-    if "html_hash" not in prev.columns:
-        # pre-refresh snapshot: no stored hashes — everything
-        # classifies as changed below (eqNullSafe never matches NULL
-        # against a real hash)
-        prev = prev.withColumn("html_hash", F.lit(None).cast("string"))
     hashed = with_html_hash(with_shard(pages, num_shards))
 
     # per-url classification over the tiny (url, hash) projections:
@@ -391,9 +444,7 @@ def run_extraction_incremental(
     n_reused = unchanged_urls.count()
     n_deleted = cls.where(F.col("_n_new").isNull()).count()
 
-    extracted_new = extract_shards(
-        hashed.join(unchanged_urls, "url", "left_anti"), num_shards
-    )
+    extracted_new = extract_shards(hashed.join(unchanged_urls, "url", "left_anti"))
     # the unchanged set is corpus-sized — a plain url-keyed semi-join,
     # never a broadcast. The reused rows' shard is RECOMPUTED (not
     # carried from the previous snapshot): if this refresh runs with a
@@ -410,7 +461,7 @@ def run_extraction_incremental(
     cls.unpersist()
 
     written = read_extracted(spark, out_path, table_format)
-    rows = _append_lineage(spark, written, f"{out_path}/lineage", run_id)
+    rows = _append_lineage(spark, written, f"{out_path}/lineage", run_id, range(num_shards))
     n_docs = sum(r.n_docs for r in rows)
     return {
         "n_reused": n_reused,

@@ -8,11 +8,17 @@ on must be visible in `explain` output, not just intended.
 - whole-stage codegen spans exist on the relational queries;
 - one Python stage per extraction pass: the extractor sits in the scan
   stage below the shard shuffle, and the lineage rows are a JVM scan;
+- the shard shuffle is a column-only hash repartition that AQE
+  coalesces by bytes (not a fixed ``num_shards``-derived count), and
+  each shard directory still gets one file;
+- the read-back starts no Spark job (declared schema, driver-side
+  partition listing);
 - resume set read once to the driver: a fully-done resume runs only
-  the lineage read, and a partial resume's read-back prunes the done
-  shards' partitions.
+  the lineage read, on a sparse corpus too, and a partial resume's
+  read-back prunes the done shards' partitions.
 """
 
+import os
 import re
 import time
 
@@ -26,6 +32,7 @@ from sax_wasm_spark.plans.lineage import (
     extract_shards,
     lineage_rows,
     not_done,
+    read_extracted,
     run_extraction,
     with_html_hash,
     with_shard,
@@ -70,12 +77,12 @@ def test_extraction_python_stage_sits_below_shard_shuffle(spark, pages_path, tmp
     the extractor reads the resume-filtered pages unshuffled and only its
     output crosses the shard shuffle. A shuffle in front of it would make
     the number of Python tasks follow the shuffle's partition count
-    (num_shards // 4) instead of the input splits."""
+    instead of the input splits."""
     pages = spark.read.parquet(pages_path)
     done = completed_shards(spark, str(tmp_path / "no_lineage"))
     assert done == frozenset()
     todo = not_done(with_shard(pages, 64), done | {3})
-    tree = tree_of(extract_shards(with_html_hash(todo), 64)).splitlines()
+    tree = tree_of(extract_shards(with_html_hash(todo))).splitlines()
     py = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
     assert len(py) == 1, "\n".join(tree)
     shuffles = [i for i, ln in enumerate(tree) if "Exchange hashpartitioning(" in ln]
@@ -110,20 +117,93 @@ def jobs_of(spark, group, fn):
     return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_extraction_pass_job_counts(spark, tmp_path):
-    """A fresh 64-shard pass runs 7 jobs: the extract stage and the
-    write, the read-back's schema and partition listing, the lineage
-    aggregate and its append. A resume pass whose shards are all done
-    runs only the lineage read: no pages scan, write or read-back."""
-    synthesize_pages(spark, 400, partitions=2).write.parquet(str(tmp_path / "pages"))
-    pages = spark.read.parquet(str(tmp_path / "pages"))
+def test_shard_shuffle_is_coalescable(spark, pages_path):
+    """The write-side shuffle hashes ``shard`` into
+    ``spark.sql.shuffle.partitions`` partitions by column only
+    (REPARTITION_BY_COL), which AQE coalesces by bytes. A fixed count
+    (REPARTITION_BY_NUM, e.g. ``num_shards // 4``) is never coalesced
+    and sets the write tasks by the shard count."""
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    pages = spark.read.parquet(pages_path)
+    ex = extract_shards(with_html_hash(with_shard(pages, 64)))
+    (line,) = [ln for ln in tree_of(ex).splitlines() if "Exchange hashpartitioning(" in ln]
+    assert re.search(rf"Exchange hashpartitioning\(shard#\d+, {n}\), REPARTITION_BY_COL", line), line
+    ex.collect()
+    assert "AQEShuffleRead coalesced" in tree_of(ex), tree_of(ex)
+
+
+def test_one_file_per_shard_directory(spark, pages_path, tmp_path):
+    """Hash partitioning puts each shard in one write task, so each
+    ``shard=`` directory holds one file, with fewer shuffle partitions
+    than shards (8 vs 64) and with more (8 vs 4)."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    pages = spark.read.parquet(pages_path)
+    for num_shards in (64, 4):
+        out = tmp_path / f"out{num_shards}"
+        run_extraction(spark, pages, str(out), num_shards, "r1")
+        dirs = [d for d in os.listdir(out / "extracted") if d.startswith("shard=")]
+        assert dirs
+        files = {
+            d: [f for f in os.listdir(out / "extracted" / d) if f.endswith(".parquet")]
+            for d in dirs
+        }
+        assert all(len(f) == 1 for f in files.values()), files
+
+
+@pytest.fixture(scope="module")
+def passes_64(spark, tmp_path_factory):
+    """A fresh pass and a fully-done resume over 400 pages on 64 shards
+    (every shard populated), with the Spark jobs each ran."""
+    root = tmp_path_factory.mktemp("passes64")
+    synthesize_pages(spark, 400, partitions=2).write.parquet(str(root / "pages"))
+    pages = spark.read.parquet(str(root / "pages"))
     assert with_shard(pages, 64).select("shard").distinct().count() == 64
-    out = str(tmp_path / "out")
-    fresh, n_fresh = jobs_of(spark, "fresh", lambda: run_extraction(spark, pages, out, 64, "r1"))
-    done, n_done = jobs_of(spark, "done", lambda: run_extraction(spark, pages, out, 64, "r2"))
+    out = str(root / "out")
+    fresh = jobs_of(spark, "fresh", lambda: run_extraction(spark, pages, out, 64, "r1"))
+    done = jobs_of(spark, "done", lambda: run_extraction(spark, pages, out, 64, "r2"))
+    return out, fresh, done
+
+
+def test_extraction_pass_job_counts(passes_64):
+    """A fresh 64-shard pass runs 5 jobs: the extract stage (scan,
+    extractor, shard shuffle write), the output write, the lineage
+    aggregate's shuffle stage and its collect, and the lineage append.
+    The read-back starts none. A resume pass whose shards are all done
+    runs only the lineage read: no pages scan, write or read-back."""
+    _, (fresh, n_fresh), (done, n_done) = passes_64
     assert fresh["processed_shards"] == 64
     assert done == {"processed_shards": 0, "skipped_shards": 64, "n_docs": 0}
-    assert (n_fresh, n_done) == (7, 1)
+    assert (n_fresh, n_done) == (5, 1)
+
+
+def test_read_extracted_starts_no_job(spark, passes_64):
+    """Reading a 64-shard root back declares its schema (no footer job)
+    and lists the shard directories on the driver (no listing job)."""
+    out = passes_64[0]
+    df, n = jobs_of(spark, "read", lambda: read_extracted(spark, out))
+    assert n == 0
+    assert df.schema.simpleString() == lineage.EXTRACTED_SCHEMA.simpleString()
+    assert spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "32"
+
+
+def test_sparse_corpus_resume_runs_one_job(spark, pages_path, tmp_path):
+    """50 pages on 64 shards leave some shards empty. The first pass
+    records each with a zero-count ok row, so the second pass finds
+    every shard done and runs only the lineage read."""
+    pages = spark.read.parquet(pages_path)
+    populated = {r.shard for r in with_shard(pages, 64).select("shard").distinct().collect()}
+    assert 0 < len(populated) < 64
+    out = str(tmp_path / "out")
+    first = run_extraction(spark, pages, out, 64, "r1")
+    assert first == {"processed_shards": 64, "skipped_shards": 0, "n_docs": 50}
+    second, n = jobs_of(spark, "sparse", lambda: run_extraction(spark, pages, out, 64, "r2"))
+    assert second == {"processed_shards": 0, "skipped_shards": 64, "n_docs": 0}
+    assert n == 1
+    lin = spark.read.parquet(f"{out}/lineage").collect()
+    assert sorted(r.shard for r in lin) == list(range(64))
+    empty = {r.shard for r in lin if r.n_docs == 0}
+    assert empty == set(range(64)) - populated
+    assert all((r.status, r.n_chars, r.n_events) == ("ok", 0, 0) for r in lin if r.shard in empty)
 
 
 def test_partial_resume_read_back_prunes_done_shards(spark, pages_path, tmp_path, monkeypatch):
@@ -132,8 +212,12 @@ def test_partial_resume_read_back_prunes_done_shards(spark, pages_path, tmp_path
     ``shard``, so the done shards' files are never opened."""
     pages = spark.read.parquet(pages_path)
     out = str(tmp_path / "out")
-    first = with_shard(pages, 64).where(F.col("shard") < 32).drop("shard")
-    run_extraction(spark, first, out, 64, "r1")
+    run_extraction(spark, pages, out, 64, "r1")
+    # reopen shards >= 32: drop their lineage rows, as one does to have
+    # the next pass re-extract them (a completed pass records every shard
+    # it covered, so a pass over fewer pages would not leave them open)
+    kept = spark.read.parquet(f"{out}/lineage").where(F.col("shard") < 32).collect()
+    lineage_rows(spark, kept).write.mode("overwrite").parquet(f"{out}/lineage")
     done = completed_shards(spark, f"{out}/lineage")
     assert done and all(s < 32 for s in done)
 

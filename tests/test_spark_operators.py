@@ -3,6 +3,7 @@ resume, skew salting, similarity search, multimodal decode, streaming.
 One shared local[4] session (tests/conftest.py)."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +13,7 @@ from sax_wasm_spark.kernel.saxkernel import SaxParser
 from sax_wasm_spark.operators.extract import extract_bytes, extract_main_content
 from sax_wasm_spark.operators.similarity import ann_lsh, knn_bruteforce
 from sax_wasm_spark.operators.tokenize import tokenize_events
-from sax_wasm_spark.plans.lineage import run_extraction, with_shard
+from sax_wasm_spark.plans.lineage import lineage_rows, run_extraction, with_shard
 from sax_wasm_spark.sources.pages import build_page, synthesize_pages
 
 N_PAGES = 120
@@ -108,14 +109,22 @@ def test_extract_drops_boilerplate():
 
 def test_lineage_resume_idempotent(spark, pages, tmp_path):
     out = str(tmp_path / "extract_out")
-    # first run: shards 0 and 1 "fail" (their pages never reach the pass)
-    survivors = with_shard(pages, 8).where(~F.col("shard").isin(0, 1)).drop("shard")
-    r1 = run_extraction(spark, survivors, out, num_shards=8, run_id="r1")
-    assert r1["processed_shards"] <= 8
+    r1 = run_extraction(spark, pages, out, num_shards=8, run_id="r1")
+    assert r1["processed_shards"] == 8
+    # shards 0 and 1 "fail": their output and their lineage rows are lost
+    # (a completed pass records every shard it covered, so a pass over
+    # fewer pages would not leave them open)
+    lost = with_shard(pages, 8).where(F.col("shard").isin(0, 1)).count()
+    assert lost > 0
+    for s in (0, 1):
+        shutil.rmtree(f"{out}/extracted/shard={s}")
+    kept = spark.read.parquet(f"{out}/lineage").where(~F.col("shard").isin(0, 1)).collect()
+    lineage_rows(spark, kept).write.mode("overwrite").parquet(f"{out}/lineage")
     n1 = spark.read.parquet(f"{out}/extracted").count()
-    # resume: only the remaining shards run
+    assert n1 == N_PAGES - lost
+    # resume: only the lost shards run
     r2 = run_extraction(spark, pages, out, num_shards=8, run_id="r2")
-    assert r2["skipped_shards"] == r1["processed_shards"]
+    assert r2 == {"processed_shards": 2, "skipped_shards": 6, "n_docs": lost}
     total = spark.read.parquet(f"{out}/extracted").count()
     assert total == N_PAGES
     assert total > n1
@@ -126,7 +135,7 @@ def test_lineage_resume_idempotent(spark, pages, tmp_path):
     # lineage covers every shard exactly once with ok status
     lin = spark.read.parquet(f"{out}/lineage")
     ok = lin.where(F.col("status") == "ok").select("shard").distinct().count()
-    assert ok == r1["processed_shards"] + r2["processed_shards"]
+    assert ok == lin.count() == 8
 
 
 def test_lineage_unreadable_table_raises(spark, pages, tmp_path):
@@ -990,6 +999,35 @@ def test_incremental_edge_cases(spark, tmp_path):
     )
     assert bad == 0
     assert got3.select("shard").distinct().count() <= 7
+
+
+def test_incremental_into_empty_root_is_fresh(spark, tmp_path):
+    """The refresh reads its output root with a declared schema, so an
+    existing but empty ``extracted`` directory reads as no rows instead
+    of failing schema inference. It holds no shard that the overwrite
+    could keep stale, so it counts as fresh, like a missing root; the
+    result equals a refresh into a missing root."""
+    from sax_wasm_spark.plans.lineage import (
+        read_extracted,
+        run_extraction_incremental,
+    )
+
+    pages = synthesize_pages(spark, 20, partitions=2)
+    base = str(tmp_path / "base")
+    run_extraction(spark, pages, base, num_shards=4, run_id="b")
+    empty = tmp_path / "empty"
+    (empty / "extracted").mkdir(parents=True)
+    a = run_extraction_incremental(spark, pages, str(empty), base, num_shards=4, run_id="i")
+    b = run_extraction_incremental(
+        spark, pages, str(tmp_path / "missing"), base, num_shards=4, run_id="i"
+    )
+    assert a == b == {"n_reused": 20, "n_extracted": 0, "n_deleted": 0, "n_docs": 20}
+    cols = ["url", "text", "status", "html_hash", "shard"]
+
+    def rows(root):
+        return sorted(map(tuple, read_extracted(spark, root).select(*cols).collect()))
+
+    assert rows(str(empty)) == rows(str(tmp_path / "missing")) == rows(base)
 
 
 def test_head_metadata_pairing_and_edge_cases(spark):
