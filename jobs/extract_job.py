@@ -11,19 +11,17 @@ Usage (sandbox, synthesizes input):
     python jobs/extract_job.py --synth 10000 --output /tmp/extract_out
 
 Resumable: re-running the same command after a failure processes only
-the shards without an ok lineage row (plans/lineage.py). Each shard's
-output directory is replaced atomically via dynamic partition
-overwrite, so retries are idempotent.
+the shards without an ok lineage row (plans/lineage.py). Each pass
+writes a new extracted/pass=<pass_id>/ directory and commits it with
+its lineage rows, so a retry never overwrites a file and a pass that
+dies before its commit is never read.
 
-Cluster sizing guidance (10^12 docs): the extractor runs in the scan
-stage, so its Python tasks follow the input splits
-(spark.sql.files.maxPartitionBytes sizes them by bytes), not
---num-shards. --num-shards sets the output files and the retry units:
-one shard ≈ one retry unit and one output file. The shard shuffle is
-hashed by column only, so AQE coalesces the write tasks by output
-bytes (spark.sql.shuffle.partitions is their upper bound), whatever
---num-shards is; pick num-shards ≈ 4-16x the executor count. Executor memory only needs one Arrow batch +
-one document's parser state per core
+Cluster sizing guidance (10^12 docs): the extractor and the write run
+in the scan stage, so the Python tasks and the output files follow the
+input splits (spark.sql.files.maxPartitionBytes sizes them by bytes),
+not --num-shards. --num-shards sets the retry units only; pick
+num-shards ≈ 4-16x the executor count. Executor memory only needs one
+Arrow batch + one document's parser state per core
 (spark.sql.execution.arrow.maxRecordsPerBatch bounds the batch).
 """
 
@@ -55,8 +53,9 @@ def main():
     ap.add_argument(
         "--lineage-path",
         default=None,
-        help="lineage parquet location (default <output>/lineage; required "
-        "with --table-format iceberg, where --output is not a path)",
+        help="lineage parquet location for --table-format iceberg, where "
+        "--output is not a path (required there); parquet output always "
+        "commits to <output>/lineage, and any other path is refused",
     )
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()

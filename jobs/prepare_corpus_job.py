@@ -39,7 +39,7 @@ parquet (predicate pushdown applies — the scan never rereads html);
 stage 3 shuffles only on hash/bucket/id keys; every stage reads the
 previous stage's persisted output, so any stage can be re-run
 independently and the extract stage resumes per shard. Outputs:
-<out>/extracted (sharded), <out>/filtered, <out>/pairs, /clusters,
+<out>/extracted (one directory per pass), <out>/filtered, <out>/pairs, /clusters,
 /drops, /kept, /stats, /lineage.
 """
 

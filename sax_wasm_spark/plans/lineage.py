@@ -1,57 +1,59 @@
 """Per-partition lineage + idempotent resume for the extraction job.
 
 North-rule requirement: "resumable per-partition checkpoint/lineage".
-Design (SURVEY.md §2.4 checkpoint row):
+Design (SURVEY.md §2.4 checkpoint row; SCALE_DESIGN.md, lineage section):
 
 - The corpus is split into ``num_shards`` deterministic url-hash shards:
   shard = pmod(xxhash(sha2(url,256)), num_shards). The shard id is the
   unit of work, retry, and lineage — stable across runs and cluster
   sizes because it depends only on the url.
-- Extracted output is written parquet-partitioned by ``shard`` with
-  dynamic partition overwrite, so re-processing a shard atomically
-  replaces exactly its own directory (idempotent under retry).
-- After a successful write, one lineage row per shard the pass covered
-  (shard, status, n_docs, n_chars, n_events, run_id, finished_at) is
-  appended to ``<out>/lineage``; a covered shard that holds no page
-  gets a row with zero counts. On resume, the resume set (the shards
-  marked ok) is read once to the driver — the lineage table is tiny —
-  and the pass filters the rest with one ``shard NOT IN (...)``
-  predicate; when every shard is done the pass returns after that one
-  read, on a sparse corpus too. A completed pass thus vouches for every
-  shard it covered: resume with the same pages, since a shard whose
-  pages were missing from that pass is recorded as empty. To re-extract
-  a shard, drop its lineage rows.
-- The output is read back with its declared schema
-  (``EXTRACTED_SCHEMA``) and with partition discovery on the driver,
-  so a read starts no Spark job: no footer read to infer the schema,
-  no listing job over the ``shard=`` directories.
+- The pass, not the shard, is the unit of output. A pass writes its
+  rows into a new directory ``<out>/extracted/pass=<pass_id>/``, with
+  ``shard`` as a data column; ``pass_id`` is made once per call and
+  sorts by time. No pass overwrites a file.
+- The lineage append after the write is the commit: one row per shard
+  the pass covered (shard, status, n_docs, n_chars, n_events, run_id,
+  finished_at, pass_id) is appended to ``<out>/lineage``; a covered
+  shard that holds no page gets a row with zero counts. A shard's rows
+  are those of the pass named by its latest ok lineage row, so a pass
+  that dies between its write and its commit leaves a directory that
+  no reader sees, and the next pass re-extracts its shards.
+- On resume, the resume set (the shards marked ok) is read once to the
+  driver — the lineage table is tiny — and the pass filters the rest
+  with one ``shard NOT IN (...)`` predicate; when every shard is done
+  the pass returns after that one read, on a sparse corpus too. A
+  completed pass thus vouches for every shard it covered: resume with
+  the same pages, since a shard whose pages were missing from that pass
+  is recorded as empty. To re-extract a shard, drop its lineage rows.
+- The output is read back (``read_extracted``) as a lazy semi-join of
+  the stored rows with each shard's latest committed pass. Both reads
+  declare their schemas and list their directories on the driver, so
+  the read starts no Spark job (up to 32 pass directories; above that
+  Spark lists them in a job).
 
 Stage layout (``extract_shards``, shared by both writers): the
-extractor runs inside the stage that produces its input, and only its
-output is shuffled by shard for the write. In ``run_extraction`` that
-is the scan stage (pages scan + resume filter), so a pass runs
-exactly one Python stage, whose task count follows the input splits
-(which Spark sizes by bytes, ``spark.sql.files.maxPartitionBytes``),
-not ``num_shards``. Each Python task pays a fixed start cost before its
-first row (0.1-0.5 s measured on a 4-core VM, against ~0.6 ms of
-kernel time per page), so a fixed-count shuffle in front of the
-extractor would let that cost, not the kernel, set the pass time. The
-shard shuffle behind it is a column-only ``repartition("shard")``:
-AQE coalesces its ``spark.sql.shuffle.partitions`` partitions by
-bytes, so the write tasks follow the output size, not ``num_shards``,
-and each shard still lands in one task, hence one file. The appended
-lineage rows are built on the JVM (``LocalTableScan``), so they start
-no Python task either.
+extractor runs inside the stage that produces its input, and the
+write runs in that stage too. In ``run_extraction`` that is the scan
+stage (pages scan + resume filter), so a pass runs exactly one Python
+stage, whose task count — and so the number of files it writes —
+follows the input splits (which Spark sizes by bytes,
+``spark.sql.files.maxPartitionBytes``), not ``num_shards``. Each Python
+task pays a fixed start cost before its first row (0.1-0.5 s measured
+on a 4-core VM, against ~0.6 ms of kernel time per page), so a
+fixed-count shuffle in front of the extractor would let that cost, not
+the kernel, set the pass time. The appended lineage rows are built on
+the JVM (``LocalTableScan``), so they start no Python task either.
 
 At 10^12 documents the same layout holds: shards are the retry ledger
 (thousands of rows), not the data; the resume filter is a hash-set
-lookup per scanned row, on the read-back a partition prune, and the
-extract stage is embarrassingly parallel over the scan splits.
+lookup per scanned row, and the extract-and-write stage is
+embarrassingly parallel over the scan splits.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -59,13 +61,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from ..operators.extract import EXTRACT_SCHEMA, extract_main_content
 
@@ -78,22 +74,21 @@ LINEAGE_SCHEMA = StructType(
         StructField("n_events", LongType(), False),
         StructField("run_id", StringType(), False),
         StructField("finished_at", LongType(), False),
+        StructField("pass_id", StringType(), False),
     ]
 )
 
-# The written output (extract_shards): the extractor's columns, the
-# raw-html hash the next refresh keys on, and the partition column last,
-# where a partitioned read puts it. A snapshot written before html_hash
-# existed reads it as NULL.
+# The output as read back (read_extracted): the extractor's columns, the
+# raw-html hash the next refresh keys on, and the shard. A snapshot
+# written before html_hash existed reads it as NULL.
 EXTRACTED_SCHEMA = StructType(
     EXTRACT_SCHEMA.fields
     + [StructField("html_hash", StringType()), StructField("shard", IntegerType())]
 )
 
-# Above this many directories at one level, partition discovery lists
-# them in a Spark job (one task per directory; default 32, so every
-# read of a 64-shard root started a 64-task job).
-_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# The stored rows: EXTRACTED_SCHEMA plus the pass=<pass_id> directory
+# each row was written into, read as a partition column.
+_STORED_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [StructField("pass", StringType())])
 
 
 def with_shard(df: DataFrame, num_shards: int, url_col: str = "url") -> DataFrame:
@@ -128,8 +123,8 @@ def completed_shards(spark: SparkSession, lineage_path: str) -> frozenset[int]:
 def not_done(df: DataFrame, done: frozenset[int]) -> DataFrame:
     """``df`` without the rows of the ``done`` shards. One SQL
     ``NOT IN`` string, so one JVM call however many shards are done
-    (``Column.isin`` makes one per literal); on a ``shard``-partitioned
-    read it prunes partitions."""
+    (``Column.isin`` makes one per literal); on the ``shard``-partitioned
+    Iceberg table it prunes partitions."""
     if not done:
         return df
     return df.where(F.expr(f"shard NOT IN ({','.join(map(str, sorted(done)))})"))
@@ -137,18 +132,23 @@ def not_done(df: DataFrame, done: frozenset[int]) -> DataFrame:
 
 def write_extracted_partitioned(
     extracted: DataFrame, out_path: str, table_format: str = "parquet"
-) -> None:
-    """Partition-atomic write of the extracted output — the lineage
-    contract is 'rewriting a shard atomically replaces exactly that
-    shard'. Two interchangeable implementations (VERDICT r1 missing
-    item 2: the writer is the abstraction point where Iceberg drops
-    in):
+) -> str:
+    """Write one extraction pass and return its ``pass_id`` (made here,
+    once per call; it sorts by time). The lineage contract: the rows of
+    a shard are replaced only as a whole, and only when the pass that
+    holds its new rows is committed. Two interchangeable
+    implementations (VERDICT r1 missing item 2: the writer is the
+    abstraction point where Iceberg drops in):
 
-    - ``parquet`` (default; the in-container stand-in): dynamic
-      partition overwrite on a shard-partitioned directory tree.
-    - ``iceberg``: the identical contract via
-      ``writeTo(table).overwritePartitions()`` — a snapshot-isolated
-      REPLACE of exactly the shards present in ``extracted``. Needs
+    - ``parquet`` (default; the in-container stand-in): a new directory
+      ``<out_path>/extracted/pass=<pass_id>/`` per pass, written in the
+      stage that produces ``extracted``, with ``shard`` as a data
+      column. Nothing is overwritten: the caller's lineage append
+      commits the pass, and ``read_extracted`` shows each shard's rows
+      from its latest committed pass only.
+    - ``iceberg``: ``writeTo(table).overwritePartitions()`` — a
+      snapshot-isolated REPLACE of exactly the shards present in
+      ``extracted``, committed by the write itself. Needs
       the iceberg-spark runtime jars + a configured catalog (absent in
       this sandbox, so this branch is exercised only off-container);
       ``out_path`` is then a table identifier, not a filesystem path.
@@ -167,12 +167,9 @@ def write_extracted_partitioned(
       First run creates the table (createOrReplace); re-runs replace
       only the shards present in the frame (overwritePartitions).
     """
+    pass_id = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
     if table_format == "parquet":
-        spark = extracted.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        extracted.write.mode("overwrite").partitionBy("shard").parquet(
-            f"{out_path}/extracted"
-        )
+        extracted.write.parquet(f"{out_path}/extracted/pass={pass_id}")
     elif table_format == "iceberg":
         table = f"{out_path}_extracted"
         writer = extracted.writeTo(table).partitionedBy(F.col("shard"))
@@ -187,39 +184,65 @@ def write_extracted_partitioned(
             writer.createOrReplace()
     else:
         raise ValueError(f"unknown table_format {table_format!r}")
+    return pass_id
 
 
 def read_extracted(spark: SparkSession, out_path: str, table_format: str = "parquet") -> DataFrame:
-    """The extracted output as one frame. The parquet read declares
-    ``EXTRACTED_SCHEMA`` (no footer job to infer it) and lists the
-    ``shard=`` directories on the driver (no listing job), so it starts
-    no Spark job; the file index is built here, at read time, so the
-    listing setting is restored before the frame is used. A missing
-    root raises ``AnalysisException``; an empty one reads as no rows."""
+    """The committed extracted output as one frame, in
+    ``EXTRACTED_SCHEMA``'s columns. For parquet: the stored rows whose
+    (shard, pass) is a shard's latest ok lineage row, by a left
+    semi-join against a broadcast of those (shard, pass_id) pairs, so a
+    superseded or uncommitted pass directory is never shown (a directory
+    that no pair names is not even scanned: Spark reuses the broadcast
+    for dynamic partition pruning on ``pass``). Both reads
+    declare their schemas (no footer job) and list on the driver (no
+    listing job, up to 32 pass directories), so the read starts no
+    Spark job. A root with no ``extracted`` directory or no lineage
+    table raises ``AnalysisException``: without a lineage table its pass
+    directories were never committed, or were committed elsewhere, and
+    reading them as no rows would hide that."""
     if table_format == "parquet":
-        prev = spark.conf.get(_LISTING_THRESHOLD, None)
-        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
-        try:
-            return spark.read.schema(EXTRACTED_SCHEMA).parquet(f"{out_path}/extracted")
-        finally:
-            if prev is None:
-                spark.conf.unset(_LISTING_THRESHOLD)
-            else:
-                spark.conf.set(_LISTING_THRESHOLD, prev)
+        stored = spark.read.schema(_STORED_SCHEMA).parquet(f"{out_path}/extracted")
+        latest = (
+            spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_path}/lineage")
+            .where(F.col("status") == "ok")
+            .groupBy("shard")
+            .agg(F.max("pass_id").alias("pass"))
+        )
+        committed = stored.join(F.broadcast(latest), ["shard", "pass"], "left_semi")
+        return committed.select(*EXTRACTED_SCHEMA.fieldNames())
     if table_format == "iceberg":
         return spark.read.table(f"{out_path}_extracted")
     raise ValueError(f"unknown table_format {table_format!r}")
 
 
+def _pass_output(
+    spark: SparkSession, out_path: str, table_format: str, pass_id: str, done: frozenset[int]
+) -> DataFrame:
+    """What the pass just wrote, for its lineage counts: the parquet pass
+    directory alone, read with its declared schema, so no file of an
+    earlier pass is opened; the Iceberg table less the ``done``
+    shards."""
+    if table_format == "parquet":
+        return spark.read.schema(EXTRACTED_SCHEMA).parquet(f"{out_path}/extracted/pass={pass_id}")
+    return not_done(read_extracted(spark, out_path, table_format), done)
+
+
 def _append_lineage(
-    spark: SparkSession, written: DataFrame, lineage_path: str, run_id: str, covered: Iterable[int]
+    spark: SparkSession,
+    written: DataFrame,
+    lineage_path: str,
+    run_id: str,
+    pass_id: str,
+    covered: Iterable[int],
 ) -> list:
     """Aggregate per-shard stats over the PERSISTED output and append
     them to the lineage table, plus a zero-count ok row for each
     ``covered`` shard (one the pass scanned) that holds no row, so a
-    resume of a sparse corpus finds every shard done. Returns the rows
-    (tiny — one per shard). Shared by run_extraction and the
-    incremental refresh so the two writers cannot drift."""
+    resume of a sparse corpus finds every shard done. The append commits
+    pass ``pass_id``. Returns the rows (tiny — one per shard). Shared by
+    run_extraction and the incremental refresh so the two writers cannot
+    drift."""
     finished_at = int(time.time() * 1000)
     stats = (
         written.groupBy("shard")
@@ -231,22 +254,18 @@ def _append_lineage(
         .withColumn("status", F.lit("ok"))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("finished_at", F.lit(finished_at))
-        .select(
-            "shard", "status", "n_docs", "n_chars", "n_events", "run_id",
-            "finished_at",
-        )
+        .withColumn("pass_id", F.lit(pass_id))
+        .select(*LINEAGE_SCHEMA.fieldNames())
     )
     rows = stats.collect()
     populated = {r.shard for r in rows}
     rows += [
         Row(shard=s, status="ok", n_docs=0, n_chars=0, n_events=0, run_id=run_id,
-            finished_at=finished_at)
+            finished_at=finished_at, pass_id=pass_id)
         for s in sorted(set(covered) - populated)
     ]
     if rows:
-        lineage_rows(spark, rows).coalesce(1).write.mode("append").parquet(
-            lineage_path
-        )
+        lineage_rows(spark, rows).coalesce(1).write.mode("append").parquet(lineage_path)
     return rows
 
 
@@ -254,33 +273,25 @@ def lineage_rows(spark: SparkSession, rows: list) -> DataFrame:
     """The collected per-shard rows as a frame that plans as a JVM
     ``LocalTableScan`` (built from an Arrow table), not as a Python
     list's ``Scan ExistingRDD``, which would run a Python task."""
-    table = pa.Table.from_pylist(
-        [r.asDict() for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA)
-    )
+    table = pa.Table.from_pylist([r.asDict() for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA))
     return spark.createDataFrame(table, LINEAGE_SCHEMA)
 
 
 def extract_shards(todo: DataFrame) -> DataFrame:
     """Extract ``todo`` (shard, url, html, html_hash) inside the stage
-    that produced it, then shuffle the extracted rows by shard for the
-    write (the stage layout in the module docstring).
-
-    The column-only shuffle hashes each shard into one of
-    ``spark.sql.shuffle.partitions`` partitions, which AQE coalesces by
-    bytes into the write tasks; a shard never spans two tasks, so its
-    directory gets one file, and the shuffle key matches the lineage
-    unit. shard and the raw-html hash ride
+    that produced it; the pass writes the result from that same stage
+    (the stage layout in the module docstring), so no shuffle separates
+    the scan from the files. shard and the raw-html hash ride
     through the extractor row-aligned (passthrough): the shard
     recompute (sha2 + xxhash per row) is saved, and html_hash is what
     the NEXT refresh keys its unchanged-page classification on
     (run_extraction_incremental)."""
-    extracted = extract_main_content(
+    return extract_main_content(
         todo.select("shard", "url", "html", "html_hash"),
         "html",
         "url",
         passthrough=("shard", "html_hash"),
     )
-    return extracted.repartition("shard")
 
 
 def run_extraction(
@@ -297,31 +308,32 @@ def run_extraction(
 
     ``lineage_path`` defaults to ``<out_path>/lineage``; pass it
     explicitly when ``table_format='iceberg'`` (``out_path`` is then a
-    table identifier, not a filesystem root).
+    table identifier, not a filesystem root). Parquet output is
+    committed by ``<out_path>/lineage`` only, the table
+    ``read_extracted`` reads, so any other ``lineage_path`` raises
+    before the pass starts: its commits would name passes no reader
+    sees.
     Returns counters {processed_shards, skipped_shards, n_docs}.
     """
     if lineage_path is None:
         lineage_path = f"{out_path}/lineage"
+    elif table_format == "parquet" and lineage_path != f"{out_path}/lineage":
+        raise ValueError(f"parquet output commits to {out_path}/lineage, not {lineage_path!r}")
     done = completed_shards(spark, lineage_path)
     if done.issuperset(range(num_shards)):
         return {"processed_shards": 0, "skipped_shards": len(done), "n_docs": 0}
 
-    # extract in the scan stage, then shuffle the extracted rows by
-    # shard (extract_shards)
-    todo = not_done(with_shard(pages, num_shards), done)
-    extracted = extract_shards(with_html_hash(todo))
-    write_extracted_partitioned(extracted, out_path, table_format)
+    # extract and write in the scan stage (extract_shards)
+    extracted = extract_shards(with_html_hash(not_done(with_shard(pages, num_shards), done)))
+    pass_id = write_extracted_partitioned(extracted, out_path, table_format)
 
-    # lineage rows from the PERSISTED data: read the parquet just
-    # written back and keep only shards not previously marked ok —
-    # exactly this run's output. Round 1 re-aggregated the unpersisted
-    # `extracted` frame, re-running the tokenizer (the most expensive
-    # stage) a second time per run (VERDICT r1 item 4); reading the
-    # written files back costs one cheap columnar scan and also makes
-    # the lineage counts describe what is actually on disk.
-    written = not_done(read_extracted(spark, out_path, table_format), done)
+    # lineage rows from the PERSISTED data: the files just written, read
+    # back in one cheap columnar scan (re-aggregating the unpersisted
+    # frame would run the tokenizer a second time, VERDICT r1 item 4),
+    # so the counts describe what is on disk; the append commits the pass
+    written = _pass_output(spark, out_path, table_format, pass_id, done)
     covered = set(range(num_shards)) - done
-    rows = _append_lineage(spark, written, lineage_path, run_id, covered)
+    rows = _append_lineage(spark, written, lineage_path, run_id, pass_id, covered)
     return {
         "processed_shards": len(rows),
         "skipped_shards": len(done),
@@ -394,30 +406,26 @@ def run_extraction_incremental(
       re-extracting keeps the refreshed snapshot identical to a
       from-scratch run.
 
-    Writes the combined snapshot to ``out_path`` — which must be a
-    FRESH root, not the previous one: an in-place refresh would read
-    and overwrite the same files, and dynamic partition overwrite over
-    stale data would resurrect deleted shards (checked, raises).
+    Writes the combined snapshot to ``out_path`` as one pass and commits
+    it for every shard below ``num_shards``. ``out_path`` must differ
+    from ``previous_path`` (the reused rows are read from it during the
+    write) and must hold no committed shard: a refresh with a smaller
+    ``num_shards`` would leave the shards above it committed from the
+    old pass and resurrect their deleted urls (both checked, raise).
+    A ``previous_path`` with no lineage table raises (read_extracted).
     Returns {n_reused, n_extracted, n_deleted, n_docs}.
     """
     if previous_path == out_path:
         raise ValueError(
-            "incremental refresh cannot write in place: out_path must "
-            "differ from previous_path (the reused rows are lazily read "
-            "from it during the write)"
+            "incremental refresh cannot write in place: out_path must differ from "
+            "previous_path (the reused rows are lazily read from it during the write)"
         )
-    # Only a missing or empty output root counts as fresh: an empty one
-    # holds no shard that the overwrite could keep stale. A read failure
-    # (permissions, corrupt footer) on a root that DOES hold data
-    # propagates, never green-lighting an overwrite.
-    try:
-        fresh = read_extracted(spark, out_path, table_format).isEmpty()
-    except AnalysisException:
-        fresh = True
-    if not fresh:
+    # decided from the lineage table, not the output: an uncommitted
+    # pass directory holds no shard a reader could see
+    if completed_shards(spark, f"{out_path}/lineage"):
         raise ValueError(
-            f"out_path {out_path!r} already holds extracted data: dynamic "
-            "partition overwrite would keep stale shards (resurrecting "
+            f"out_path {out_path!r} already holds committed shards: shards "
+            "this refresh does not cover would stay stale (resurrecting "
             "deleted urls) — refresh into a fresh snapshot root"
         )
 
@@ -450,18 +458,21 @@ def run_extraction_incremental(
     # carried from the previous snapshot): if this refresh runs with a
     # different num_shards than the prior run, carried values would mix
     # two moduli and break the shard == url-hash % num_shards invariant
-    # downstream partition pruning relies on. Recomputation is the same
+    # that the lineage rows and the read-back's (shard, pass) join rely
+    # on. Recomputation is the same
     # deterministic expression, so same-num_shards refreshes stay
     # bit-identical to from-scratch runs.
     reused = with_shard(
         prev.join(unchanged_urls, "url", "left_semi").drop("shard"), num_shards
     ).select(*extracted_new.columns)
     combined = extracted_new.unionByName(reused)
-    write_extracted_partitioned(combined, out_path, table_format)
+    pass_id = write_extracted_partitioned(combined, out_path, table_format)
     cls.unpersist()
 
-    written = read_extracted(spark, out_path, table_format)
-    rows = _append_lineage(spark, written, f"{out_path}/lineage", run_id, range(num_shards))
+    written = _pass_output(spark, out_path, table_format, pass_id, frozenset())
+    rows = _append_lineage(
+        spark, written, f"{out_path}/lineage", run_id, pass_id, range(num_shards)
+    )
     n_docs = sum(r.n_docs for r in rows)
     return {
         "n_reused": n_reused,

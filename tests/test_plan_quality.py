@@ -6,26 +6,27 @@ on must be visible in `explain` output, not just intended.
 - broadcast joins: small dims broadcast;
 - partial aggregation: map-side combine before the shuffle;
 - whole-stage codegen spans exist on the relational queries;
-- one Python stage per extraction pass: the extractor sits in the scan
-  stage below the shard shuffle, and the lineage rows are a JVM scan;
-- the shard shuffle is a column-only hash repartition that AQE
-  coalesces by bytes (not a fixed ``num_shards``-derived count), and
-  each shard directory still gets one file;
-- the read-back starts no Spark job (declared schema, driver-side
-  partition listing);
+- one stage per extraction pass: the extractor and the write both run
+  in the scan stage, with no shuffle, and the lineage rows are a JVM
+  scan;
+- the number of files a pass writes follows the input splits, not
+  ``num_shards``;
+- the read-back starts no Spark job (declared schemas, driver-side
+  listing), after a partial resume too;
 - resume set read once to the driver: a fully-done resume runs only
   the lineage read, on a sparse corpus too, and a partial resume's
-  read-back prunes the done shards' partitions.
+  lineage aggregate scans only the pass directory it wrote.
 """
 
 import os
 import re
+import shutil
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from sax_wasm_spark.operators.extract import extract_main_content
+from sax_wasm_spark.operators.extract import extract_bytes, extract_main_content
 from sax_wasm_spark.plans import lineage
 from sax_wasm_spark.plans.lineage import (
     completed_shards,
@@ -72,30 +73,28 @@ def tree_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().treeString()
 
 
-def test_extraction_python_stage_sits_below_shard_shuffle(spark, pages_path, tmp_path):
-    """The extraction pass runs ONE Python stage, inside the scan stage:
-    the extractor reads the resume-filtered pages unshuffled and only its
-    output crosses the shard shuffle. A shuffle in front of it would make
-    the number of Python tasks follow the shuffle's partition count
-    instead of the input splits."""
+def test_extraction_pass_plan_has_no_shuffle(spark, pages_path, tmp_path):
+    """The extraction pass runs ONE stage: the extractor reads the
+    resume-filtered pages unshuffled, and the write takes its output in
+    the same stage. A shuffle in front of the extractor would make the
+    number of Python tasks follow the shuffle's partition count instead
+    of the input splits; one behind it would make the write tasks, and
+    the files, follow ``num_shards``."""
     pages = spark.read.parquet(pages_path)
     done = completed_shards(spark, str(tmp_path / "no_lineage"))
     assert done == frozenset()
     todo = not_done(with_shard(pages, 64), done | {3})
     tree = tree_of(extract_shards(with_html_hash(todo))).splitlines()
-    py = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
-    assert len(py) == 1, "\n".join(tree)
-    shuffles = [i for i, ln in enumerate(tree) if "Exchange hashpartitioning(" in ln]
-    assert len(shuffles) == 1, "\n".join(tree)
-    assert "Exchange hashpartitioning(shard" in tree[shuffles[0]], "\n".join(tree)
-    assert shuffles[0] < py[0], "\n".join(tree)  # the shuffle is above the extractor
+    assert sum("MapInArrow" in ln for ln in tree) == 1, "\n".join(tree)
+    assert not any("Exchange" in ln for ln in tree), "\n".join(tree)
 
 
 def test_lineage_rows_are_a_jvm_scan(spark):
     from pyspark.sql import Row
 
     rows = [
-        Row(shard=s, status="ok", n_docs=3, n_chars=40, n_events=9, run_id="r", finished_at=1)
+        Row(shard=s, status="ok", n_docs=3, n_chars=40, n_events=9, run_id="r", finished_at=1,
+            pass_id="p")
         for s in range(3)
     ]
     df = lineage_rows(spark, rows)
@@ -117,37 +116,21 @@ def jobs_of(spark, group, fn):
     return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_shard_shuffle_is_coalescable(spark, pages_path):
-    """The write-side shuffle hashes ``shard`` into
-    ``spark.sql.shuffle.partitions`` partitions by column only
-    (REPARTITION_BY_COL), which AQE coalesces by bytes. A fixed count
-    (REPARTITION_BY_NUM, e.g. ``num_shards // 4``) is never coalesced
-    and sets the write tasks by the shard count."""
-    n = spark.conf.get("spark.sql.shuffle.partitions")
+def test_pass_file_count_follows_input_splits(spark, pages_path, tmp_path):
+    """A pass writes one directory, ``pass=<pass_id>``, from the scan
+    stage, so the number of files follows the input splits: 64 and
+    1,024 shards write the same files, each holding many shards."""
     pages = spark.read.parquet(pages_path)
-    ex = extract_shards(with_html_hash(with_shard(pages, 64)))
-    (line,) = [ln for ln in tree_of(ex).splitlines() if "Exchange hashpartitioning(" in ln]
-    assert re.search(rf"Exchange hashpartitioning\(shard#\d+, {n}\), REPARTITION_BY_COL", line), line
-    ex.collect()
-    assert "AQEShuffleRead coalesced" in tree_of(ex), tree_of(ex)
-
-
-def test_one_file_per_shard_directory(spark, pages_path, tmp_path):
-    """Hash partitioning puts each shard in one write task, so each
-    ``shard=`` directory holds one file, with fewer shuffle partitions
-    than shards (8 vs 64) and with more (8 vs 4)."""
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    pages = spark.read.parquet(pages_path)
-    for num_shards in (64, 4):
+    files = {}
+    for num_shards in (64, 1024):
         out = tmp_path / f"out{num_shards}"
         run_extraction(spark, pages, str(out), num_shards, "r1")
-        dirs = [d for d in os.listdir(out / "extracted") if d.startswith("shard=")]
-        assert dirs
-        files = {
-            d: [f for f in os.listdir(out / "extracted" / d) if f.endswith(".parquet")]
-            for d in dirs
-        }
-        assert all(len(f) == 1 for f in files.values()), files
+        (pass_dir,) = os.listdir(out / "extracted")
+        assert pass_dir.startswith("pass=")
+        files[num_shards] = [
+            f for f in os.listdir(out / "extracted" / pass_dir) if f.endswith(".parquet")
+        ]
+    assert 0 < len(files[64]) == len(files[1024]) <= pages.rdd.getNumPartitions(), files
 
 
 @pytest.fixture(scope="module")
@@ -165,25 +148,40 @@ def passes_64(spark, tmp_path_factory):
 
 
 def test_extraction_pass_job_counts(passes_64):
-    """A fresh 64-shard pass runs 5 jobs: the extract stage (scan,
-    extractor, shard shuffle write), the output write, the lineage
-    aggregate's shuffle stage and its collect, and the lineage append.
-    The read-back starts none. A resume pass whose shards are all done
-    runs only the lineage read: no pages scan, write or read-back."""
+    """A fresh 64-shard pass runs 4 jobs: the extract stage (scan,
+    extractor and the pass directory write, in one stage), the lineage
+    aggregate's shuffle stage over that directory and its collect, and
+    the lineage append, which commits the pass. A resume pass whose
+    shards are all done runs only the lineage read: no pages scan,
+    write or aggregate."""
     _, (fresh, n_fresh), (done, n_done) = passes_64
     assert fresh["processed_shards"] == 64
     assert done == {"processed_shards": 0, "skipped_shards": 64, "n_docs": 0}
-    assert (n_fresh, n_done) == (5, 1)
+    assert (n_fresh, n_done) == (4, 1)
 
 
-def test_read_extracted_starts_no_job(spark, passes_64):
-    """Reading a 64-shard root back declares its schema (no footer job)
-    and lists the shard directories on the driver (no listing job)."""
-    out = passes_64[0]
-    df, n = jobs_of(spark, "read", lambda: read_extracted(spark, out))
-    assert n == 0
-    assert df.schema.simpleString() == lineage.EXTRACTED_SCHEMA.simpleString()
-    assert spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "32"
+def test_read_extracted_starts_no_job(spark, passes_64, tmp_path):
+    """Reading a root back declares the schemas of its rows and of its
+    lineage (no footer job) and lists the pass directories on the
+    driver (no listing job): no job after a fresh pass, nor after a
+    partial resume, which leaves two pass directories."""
+    out = str(tmp_path / "out")
+    shutil.copytree(passes_64[0], out)
+
+    def check(n_passes):
+        assert len(os.listdir(f"{out}/extracted")) == n_passes
+        df, n = jobs_of(spark, f"read{n_passes}", lambda: read_extracted(spark, out))
+        assert n == 0
+        assert df.schema.simpleString() == lineage.EXTRACTED_SCHEMA.simpleString()
+        assert df.count() == 400
+
+    check(1)
+    # reopen shards >= 32 and re-extract them as a second pass
+    kept = spark.read.parquet(f"{out}/lineage").where(F.col("shard") < 32).collect()
+    lineage_rows(spark, kept).write.mode("overwrite").parquet(f"{out}/lineage")
+    pages = spark.read.parquet(os.path.join(os.path.dirname(passes_64[0]), "pages"))
+    run_extraction(spark, pages, out, 64, "r2")
+    check(2)
 
 
 def test_sparse_corpus_resume_runs_one_job(spark, pages_path, tmp_path):
@@ -206,13 +204,14 @@ def test_sparse_corpus_resume_runs_one_job(spark, pages_path, tmp_path):
     assert all((r.status, r.n_chars, r.n_events) == ("ok", 0, 0) for r in lin if r.shard in empty)
 
 
-def test_partial_resume_read_back_prunes_done_shards(spark, pages_path, tmp_path, monkeypatch):
-    """The read-back of a partial resume reads only the shards this pass
-    wrote: the resume filter reaches the scan as a partition filter on
-    ``shard``, so the done shards' files are never opened."""
+def test_partial_resume_lineage_scans_only_new_pass(spark, pages_path, tmp_path, monkeypatch):
+    """The lineage aggregate of a partial resume reads only the pass
+    directory this pass wrote, so the done shards' files, which sit in
+    the first pass directory, are never opened."""
     pages = spark.read.parquet(pages_path)
     out = str(tmp_path / "out")
     run_extraction(spark, pages, out, 64, "r1")
+    (first,) = os.listdir(f"{out}/extracted")
     # reopen shards >= 32: drop their lineage rows, as one does to have
     # the next pass re-extract them (a completed pass records every shard
     # it covered, so a pass over fewer pages would not leave them open)
@@ -221,20 +220,86 @@ def test_partial_resume_read_back_prunes_done_shards(spark, pages_path, tmp_path
     done = completed_shards(spark, f"{out}/lineage")
     assert done and all(s < 32 for s in done)
 
-    read_backs = []
+    aggregated = []
     append = lineage._append_lineage
 
     def spy(spark_, written, *args):
-        read_backs.append(written)
+        aggregated.append(written)
         return append(spark_, written, *args)
 
     monkeypatch.setattr(lineage, "_append_lineage", spy)
     rows = run_extraction(spark, pages, out, 64, "r2")
     assert rows["skipped_shards"] == len(done) and rows["processed_shards"] > 0
-    (written,) = read_backs
-    m = re.search(r"PartitionFilters: \[NOT shard#\d+ INSET ([\d, ]+)\]", plan_of(written))
-    assert m, plan_of(written)
-    assert {int(s) for s in m.group(1).split(",")} == done
+    (second,) = set(os.listdir(f"{out}/extracted")) - {first}
+    (written,) = aggregated
+    files = written.inputFiles()
+    assert files and all(f"/{second}/" in f for f in files), files
+    assert {r.shard for r in written.select("shard").collect()}.isdisjoint(done)
+
+
+def test_killed_pass_is_invisible(spark, tmp_path, monkeypatch):
+    """A pass that dies between its write and its lineage commit changes
+    nothing a reader sees: its pass directory holds the new rows, but no
+    lineage row names it. The next pass re-extracts its shards, and
+    every url reads back once, with the new text."""
+    pages_path = str(tmp_path / "pages")
+    synthesize_pages(spark, 50, partitions=2).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out")
+    run_extraction(spark, pages, out, 8, "r1")
+    cols = lineage.EXTRACTED_SCHEMA.fieldNames()
+
+    # reopen shards 0 and 1, then change their pages' html
+    kept = spark.read.parquet(f"{out}/lineage").where(F.col("shard") > 1).collect()
+    lineage_rows(spark, kept).write.mode("overwrite").parquet(f"{out}/lineage")
+    reopened = with_shard(pages, 8).where(F.col("shard") <= 1)
+    urls = {r.url for r in reopened.select("url").collect()}
+    assert urls
+    delta = b"<p>the second crawl of this page</p>"
+    changed = pages.withColumn(
+        "html",
+        F.when(F.col("url").isin(*urls), F.concat("html", F.lit(delta))).otherwise(F.col("html")),
+    )
+    before = sorted(map(tuple, read_extracted(spark, out).select(*cols).collect()))
+
+    def killed(*args):
+        raise RuntimeError("killed before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "_append_lineage", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction(spark, changed, out, 8, "r2")
+    after = sorted(map(tuple, read_extracted(spark, out).select(*cols).collect()))
+    assert after == before
+    assert len(os.listdir(f"{out}/extracted")) == 2  # the killed pass did write
+
+    third = run_extraction(spark, changed, out, 8, "r3")
+    assert third["processed_shards"] == 2 and third["n_docs"] == len(urls)
+    rows = read_extracted(spark, out).collect()
+    assert len(rows) == 50  # no url twice
+    got = {r.url: r.text_bytes for r in rows}
+    want = {r.url: extract_bytes(r.html)[0] for r in changed.collect()}
+    assert got == want
+    orig = {r.url: extract_bytes(r.html)[0] for r in pages.collect()}
+    assert all(got[u] != orig[u] for u in urls)  # the new html shows in the text
+
+
+def test_extraction_leaves_session_conf_alone(spark, pages_path, tmp_path):
+    """A pass sets no session conf: the partition overwrite mode and the
+    parallel listing threshold read as they did before the call."""
+    keys = (
+        "spark.sql.sources.partitionOverwriteMode",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "static")
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        run_extraction(spark, spark.read.parquet(pages_path), str(tmp_path / "out"), 64, "r1")
+        assert {k: spark.conf.get(k) for k in keys} == before
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_resume_filter_builds_fast_at_16k_shards(spark, pages_path):

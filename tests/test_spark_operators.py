@@ -13,7 +13,7 @@ from sax_wasm_spark.kernel.saxkernel import SaxParser
 from sax_wasm_spark.operators.extract import extract_bytes, extract_main_content
 from sax_wasm_spark.operators.similarity import ann_lsh, knn_bruteforce
 from sax_wasm_spark.operators.tokenize import tokenize_events
-from sax_wasm_spark.plans.lineage import lineage_rows, run_extraction, with_shard
+from sax_wasm_spark.plans.lineage import lineage_rows, read_extracted, run_extraction, with_shard
 from sax_wasm_spark.sources.pages import build_page, synthesize_pages
 
 N_PAGES = 120
@@ -111,31 +111,59 @@ def test_lineage_resume_idempotent(spark, pages, tmp_path):
     out = str(tmp_path / "extract_out")
     r1 = run_extraction(spark, pages, out, num_shards=8, run_id="r1")
     assert r1["processed_shards"] == 8
-    # shards 0 and 1 "fail": their output and their lineage rows are lost
-    # (a completed pass records every shard it covered, so a pass over
-    # fewer pages would not leave them open)
+    # shards 0 and 1 "fail": their lineage rows are lost, so their rows
+    # no longer read back (a completed pass records every shard it
+    # covered, so a pass over fewer pages would not leave them open)
     lost = with_shard(pages, 8).where(F.col("shard").isin(0, 1)).count()
     assert lost > 0
-    for s in (0, 1):
-        shutil.rmtree(f"{out}/extracted/shard={s}")
     kept = spark.read.parquet(f"{out}/lineage").where(~F.col("shard").isin(0, 1)).collect()
     lineage_rows(spark, kept).write.mode("overwrite").parquet(f"{out}/lineage")
-    n1 = spark.read.parquet(f"{out}/extracted").count()
+    n1 = read_extracted(spark, out).count()
     assert n1 == N_PAGES - lost
     # resume: only the lost shards run
     r2 = run_extraction(spark, pages, out, num_shards=8, run_id="r2")
     assert r2 == {"processed_shards": 2, "skipped_shards": 6, "n_docs": lost}
-    total = spark.read.parquet(f"{out}/extracted").count()
+    total = read_extracted(spark, out).count()
     assert total == N_PAGES
     assert total > n1
     # third run: everything already done → no-op
     r3 = run_extraction(spark, pages, out, num_shards=8, run_id="r3")
     assert r3["processed_shards"] == 0
-    assert spark.read.parquet(f"{out}/extracted").count() == N_PAGES
+    after = read_extracted(spark, out)
+    assert after.count() == N_PAGES
+    assert after.select("url").distinct().count() == N_PAGES  # each url once
     # lineage covers every shard exactly once with ok status
     lin = spark.read.parquet(f"{out}/lineage")
     ok = lin.where(F.col("status") == "ok").select("shard").distinct().count()
     assert ok == lin.count() == 8
+
+
+def test_parquet_output_commits_only_to_its_own_lineage(spark, pages, tmp_path, monkeypatch):
+    """Parquet output reads back through ``<out>/lineage``, so a pass
+    refuses any other lineage path before it writes, and a root whose
+    pass was never committed (killed before its lineage append) raises
+    on read, and as a refresh's previous root, instead of reading as no
+    rows."""
+    from pyspark.errors import AnalysisException
+
+    from sax_wasm_spark.plans import lineage
+
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="commits to"):
+        run_extraction(spark, pages, out, 8, "r1", lineage_path=str(tmp_path / "lin"))
+    assert not os.path.exists(out) and not os.path.exists(tmp_path / "lin")
+
+    def killed(*args):
+        raise RuntimeError("killed before the commit")
+
+    monkeypatch.setattr(lineage, "_append_lineage", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_extraction(spark, pages, out, 8, "r1")
+    assert os.listdir(f"{out}/extracted") and not os.path.exists(f"{out}/lineage")
+    with pytest.raises(AnalysisException):
+        read_extracted(spark, out).count()
+    with pytest.raises(AnalysisException):
+        lineage.run_extraction_incremental(spark, pages, str(tmp_path / "new"), out, 8, "i")
 
 
 def test_lineage_unreadable_table_raises(spark, pages, tmp_path):
@@ -779,7 +807,7 @@ def test_pipeline_robots_gate_blocks_and_counts(spark, pages, tmp_path):
     )
     assert stats["robots"]["n_pages"] == pages.count()
     assert stats["robots"]["n_blocked"] == n_denied
-    extracted = spark.read.parquet(f"{out}/extracted")
+    extracted = read_extracted(spark, out)
     ex_hosts = {
         r.h for r in extracted.select(url_host(F.col("url")).alias("h")).collect()
     }
@@ -856,7 +884,7 @@ def test_incremental_extraction_reuses_unchanged(spark, pages, tmp_path):
 
     base = str(tmp_path / "snap0")
     run_extraction(spark, pages, base, num_shards=8, run_id="base")
-    prev = spark.read.parquet(f"{base}/extracted")
+    prev = read_extracted(spark, base)
     assert "html_hash" in prev.columns  # the refresh key is persisted
 
     # new crawl: drop 5 urls, mutate 7 pages' html, add 6 new pages
@@ -891,8 +919,8 @@ def test_incremental_extraction_reuses_unchanged(spark, pages, tmp_path):
     scratch = str(tmp_path / "scratch")
     run_extraction(spark, new_pages, scratch, num_shards=8, run_id="scratch")
     cols = ["url", "text", "status", "n_events", "html_hash", "shard"]
-    a = sorted(map(tuple, spark.read.parquet(f"{out}/extracted").select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(f"{scratch}/extracted").select(*cols).collect()))
+    a = sorted(map(tuple, read_extracted(spark, out).select(*cols).collect()))
+    b = sorted(map(tuple, read_extracted(spark, scratch).select(*cols).collect()))
     assert a == b
 
 
@@ -929,10 +957,13 @@ def test_incremental_edge_cases(spark, tmp_path):
     base = str(tmp_path / "base")
     run_extraction(spark, pages, base, num_shards=4, run_id="b")
 
-    # 1. previous snapshot WITHOUT html_hash → everything re-extracts
+    # 1. previous snapshot WITHOUT html_hash → everything re-extracts;
+    #    it is committed through its lineage table like any snapshot
     legacy = str(tmp_path / "legacy")
-    spark.read.parquet(f"{base}/extracted").drop("html_hash").write.parquet(
-        f"{legacy}/extracted"
+    shutil.copytree(f"{base}/lineage", f"{legacy}/lineage")
+    (pass_id,) = {r.pass_id for r in spark.read.parquet(f"{legacy}/lineage").collect()}
+    read_extracted(spark, base).drop("html_hash").write.parquet(
+        f"{legacy}/extracted/pass={pass_id}"
     )
     out1 = str(tmp_path / "out1")
     stats = run_extraction_incremental(
@@ -961,7 +992,7 @@ def test_incremental_edge_cases(spark, tmp_path):
     )
     assert stats["n_docs"] == 22  # 20 + dup row + null-html row
     assert stats["n_reused"] == 19  # all but the duplicated url
-    got = spark.read.parquet(f"{out2}/extracted")
+    got = read_extracted(spark, out2)
     assert got.where(F.col("url") == dup_url).count() == 2
     assert got.where(F.col("url") == "https://nullhtml.example.com/x").count() == 1
     scratch = str(tmp_path / "scratch2")
@@ -969,7 +1000,7 @@ def test_incremental_edge_cases(spark, tmp_path):
     cols = ["url", "text", "status", "html_hash"]
     a = sorted(map(tuple, got.select(*cols).collect()))
     b = sorted(
-        map(tuple, spark.read.parquet(f"{scratch}/extracted").select(*cols).collect())
+        map(tuple, read_extracted(spark, scratch).select(*cols).collect())
     )
     assert a == b
 
@@ -989,7 +1020,7 @@ def test_incremental_edge_cases(spark, tmp_path):
     )
     from sax_wasm_spark.plans.lineage import with_shard
 
-    got3 = spark.read.parquet(f"{out3}/extracted")
+    got3 = read_extracted(spark, out3)
     expect = with_shard(got3.select("url"), 7).withColumnRenamed("shard", "exp")
     bad = (
         got3.select("url", "shard")
@@ -1002,15 +1033,12 @@ def test_incremental_edge_cases(spark, tmp_path):
 
 
 def test_incremental_into_empty_root_is_fresh(spark, tmp_path):
-    """The refresh reads its output root with a declared schema, so an
-    existing but empty ``extracted`` directory reads as no rows instead
-    of failing schema inference. It holds no shard that the overwrite
-    could keep stale, so it counts as fresh, like a missing root; the
-    result equals a refresh into a missing root."""
-    from sax_wasm_spark.plans.lineage import (
-        read_extracted,
-        run_extraction_incremental,
-    )
+    """The refresh decides whether its output root is fresh from the
+    root's lineage table, not from its files: an existing but empty
+    ``extracted`` directory holds no committed shard, so it counts as
+    fresh, like a missing root; the result equals a refresh into a
+    missing root."""
+    from sax_wasm_spark.plans.lineage import run_extraction_incremental
 
     pages = synthesize_pages(spark, 20, partitions=2)
     base = str(tmp_path / "base")
