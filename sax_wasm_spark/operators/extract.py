@@ -46,7 +46,8 @@ from exactly this spec — FIXTURES.md §6):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -121,6 +122,24 @@ EXTRACT_SCHEMA = StructType(
         StructField("status", StringType(), False),
     ]
 )
+
+# What the Python stage returns: EXTRACT_SCHEMA less ``text``, which
+# the JVM derives from ``text_bytes`` (text_of), so the extracted text
+# crosses the Python->JVM boundary once.
+_ROW_FIELDS = [f for f in EXTRACT_SCHEMA.fields if f.name != "text"]
+
+
+def text_of() -> Column:
+    """The ``text`` column: ``text_bytes`` as UTF-8 with every malformed
+    sequence replaced by U+FFFD, exactly as Python's
+    ``bytes.decode("utf-8", "replace")`` does it. Spark's
+    ``decode(b, 'UTF-8')`` would raise on such bytes instead."""
+    return F.make_valid_utf8(F.col("text_bytes").cast("string")).alias("text")
+
+
+def with_text(df: DataFrame, names: list[str]) -> DataFrame:
+    """``df``'s columns ``names``, where ``text`` is derived by text_of."""
+    return df.select(*(text_of() if n == "text" else n for n in names))
 
 
 def _extract_rows(rows) -> tuple[bytes, list[tuple[int, int]], bytes | None]:
@@ -247,7 +266,10 @@ def extract_main_content(
 ) -> DataFrame:
     """DataFrame operator: pages(url, html, …) → extracted per FIXTURES.md §3.
 
-    One ``map_rows`` row per page; a NULL html extracts as ``b""``.
+    One ``map_rows`` row per page; a NULL html extracts as ``b""``. The
+    Python stage returns the text once, as ``text_bytes``; ``text`` is
+    derived from it on the JVM (text_of), in EXTRACT_SCHEMA's column
+    order, so a caller that drops ``text`` never computes it.
     ``passthrough`` columns are copied onto the output row (exactly one
     output row per page, so they ride as ``map_rows`` id columns) —
     e.g. the raw-html hash the incremental refresh keys on
@@ -257,7 +279,7 @@ def extract_main_content(
     def extract(url, data):
         text, spans, n_events, status, title = extract_bytes(data if data is not None else b"")
         title = title.decode("utf-8", "replace") if title is not None else None
-        return [(url, title, text.decode("utf-8", "replace"), text, spans, n_events, status)]
+        return [(url, title, text, spans, n_events, status)]
 
-    out = map_rows(df, extract, [url_col, html_col], EXTRACT_SCHEMA.fields, passthrough)
-    return out.select(*EXTRACT_SCHEMA.fieldNames(), *passthrough)
+    out = map_rows(df, extract, [url_col, html_col], _ROW_FIELDS, passthrough)
+    return with_text(out, [*EXTRACT_SCHEMA.fieldNames(), *passthrough])

@@ -11,6 +11,11 @@ Design (SURVEY.md §2.4 checkpoint row; SCALE_DESIGN.md, lineage section):
   rows into a new directory ``<out>/extracted/pass=<pass_id>/``, with
   ``shard`` as a data column; ``pass_id`` is made once per call and
   sorts by time. No pass overwrites a file.
+- The extracted text is stored once, as ``text_bytes``: every read
+  derives the ``text`` string from it (operators/extract.text_of), and
+  the lineage ``n_chars`` counts that derived string. A pass written
+  while ``text`` was still stored reads the same, since no read
+  declares the stored copy.
 - The lineage append after the write is the commit: one row per shard
   the pass covered (shard, status, n_docs, n_chars, n_events, run_id,
   finished_at, pass_id) is appended to ``<out>/lineage``; a covered
@@ -57,13 +62,12 @@ import uuid
 from collections.abc import Iterable
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from ..operators.extract import EXTRACT_SCHEMA, extract_main_content
+from ..operators.extract import EXTRACT_SCHEMA, extract_main_content, text_of, with_text
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -79,16 +83,22 @@ LINEAGE_SCHEMA = StructType(
 )
 
 # The output as read back (read_extracted): the extractor's columns, the
-# raw-html hash the next refresh keys on, and the shard. A snapshot
-# written before html_hash existed reads it as NULL.
+# raw-html hash the next refresh keys on, and the shard. ``text`` is not
+# stored: every read derives it from ``text_bytes`` (text_of). A
+# snapshot written before html_hash existed reads it as NULL.
 EXTRACTED_SCHEMA = StructType(
     EXTRACT_SCHEMA.fields
     + [StructField("html_hash", StringType()), StructField("shard", IntegerType())]
 )
 
-# The stored rows: EXTRACTED_SCHEMA plus the pass=<pass_id> directory
-# each row was written into, read as a partition column.
-_STORED_SCHEMA = StructType(EXTRACTED_SCHEMA.fields + [StructField("pass", StringType())])
+# The stored columns: EXTRACTED_SCHEMA less ``text``. A pass written
+# while ``text`` was still stored keeps reading: a read declares these
+# columns only, so the stored copy is never opened.
+_STORED_SCHEMA = StructType([f for f in EXTRACTED_SCHEMA.fields if f.name != "text"])
+
+# The stored rows plus the pass=<pass_id> directory each row was
+# written into, read as a partition column.
+_PASSES_SCHEMA = StructType(_STORED_SCHEMA.fields + [StructField("pass", StringType())])
 
 
 def with_shard(df: DataFrame, num_shards: int, url_col: str = "url") -> DataFrame:
@@ -110,13 +120,16 @@ def completed_shards(spark: SparkSession, lineage_path: str) -> frozenset[int]:
     driver (empty if the table does not exist yet). Only a missing
     table counts as empty: an unreadable one raises, since reading it
     as "no shard done" would re-extract the whole corpus and append to
-    a lineage that still cannot be read."""
-    try:
-        # the known schema spares a schema-inference job: the read is
-        # the one job of a resume pass whose shards are all done
-        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    except AnalysisException:
+    a lineage that still cannot be read. The path is looked up on the
+    session's Hadoop FileSystem first: reading a missing path would
+    cost a JVM error and its conversion to ``AnalysisException``."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
         return frozenset()
+    # the known schema spares a schema-inference job: the read is the
+    # one job of a resume pass whose shards are all done
+    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     return frozenset(r.shard for r in lin.where(F.col("status") == "ok").select("shard").collect())
 
 
@@ -166,6 +179,10 @@ def write_extracted_partitioned(
 
       First run creates the table (createOrReplace); re-runs replace
       only the shards present in the frame (overwritePartitions).
+      A pass writes no ``text`` column (read_extracted derives it), so
+      a table created while ``text`` was still stored needs
+      ``ALTER TABLE cat.db.pages_extracted DROP COLUMN text`` before
+      its next pass.
     """
     pass_id = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
     if table_format == "parquet":
@@ -189,7 +206,8 @@ def write_extracted_partitioned(
 
 def read_extracted(spark: SparkSession, out_path: str, table_format: str = "parquet") -> DataFrame:
     """The committed extracted output as one frame, in
-    ``EXTRACTED_SCHEMA``'s columns. For parquet: the stored rows whose
+    ``EXTRACTED_SCHEMA``'s columns, ``text`` derived from ``text_bytes``
+    (text_of) in both formats. For parquet: the stored rows whose
     (shard, pass) is a shard's latest ok lineage row, by a left
     semi-join against a broadcast of those (shard, pass_id) pairs, so a
     superseded or uncommitted pass directory is never shown (a directory
@@ -202,7 +220,7 @@ def read_extracted(spark: SparkSession, out_path: str, table_format: str = "parq
     directories were never committed, or were committed elsewhere, and
     reading them as no rows would hide that."""
     if table_format == "parquet":
-        stored = spark.read.schema(_STORED_SCHEMA).parquet(f"{out_path}/extracted")
+        stored = spark.read.schema(_PASSES_SCHEMA).parquet(f"{out_path}/extracted")
         latest = (
             spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_path}/lineage")
             .where(F.col("status") == "ok")
@@ -210,9 +228,9 @@ def read_extracted(spark: SparkSession, out_path: str, table_format: str = "parq
             .agg(F.max("pass_id").alias("pass"))
         )
         committed = stored.join(F.broadcast(latest), ["shard", "pass"], "left_semi")
-        return committed.select(*EXTRACTED_SCHEMA.fieldNames())
+        return with_text(committed, EXTRACTED_SCHEMA.fieldNames())
     if table_format == "iceberg":
-        return spark.read.table(f"{out_path}_extracted")
+        return with_text(spark.read.table(f"{out_path}_extracted"), EXTRACTED_SCHEMA.fieldNames())
     raise ValueError(f"unknown table_format {table_format!r}")
 
 
@@ -224,7 +242,7 @@ def _pass_output(
     earlier pass is opened; the Iceberg table less the ``done``
     shards."""
     if table_format == "parquet":
-        return spark.read.schema(EXTRACTED_SCHEMA).parquet(f"{out_path}/extracted/pass={pass_id}")
+        return spark.read.schema(_STORED_SCHEMA).parquet(f"{out_path}/extracted/pass={pass_id}")
     return not_done(read_extracted(spark, out_path, table_format), done)
 
 
@@ -248,7 +266,7 @@ def _append_lineage(
         written.groupBy("shard")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(F.length("text")).alias("n_chars"),
+            F.sum(F.length(text_of())).alias("n_chars"),
             F.sum("n_events").alias("n_events"),
         )
         .withColumn("status", F.lit("ok"))
@@ -281,17 +299,18 @@ def extract_shards(todo: DataFrame) -> DataFrame:
     """Extract ``todo`` (shard, url, html, html_hash) inside the stage
     that produced it; the pass writes the result from that same stage
     (the stage layout in the module docstring), so no shuffle separates
-    the scan from the files. shard and the raw-html hash ride
-    through the extractor row-aligned (passthrough): the shard
-    recompute (sha2 + xxhash per row) is saved, and html_hash is what
-    the NEXT refresh keys its unchanged-page classification on
-    (run_extraction_incremental)."""
+    the scan from the files. Only the stored columns are kept (no
+    ``text``: readers derive it), so the write never computes ``text``.
+    shard and the raw-html hash ride through the extractor row-aligned
+    (passthrough): the shard recompute (sha2 + xxhash per row) is
+    saved, and html_hash is what the NEXT refresh keys its
+    unchanged-page classification on (run_extraction_incremental)."""
     return extract_main_content(
         todo.select("shard", "url", "html", "html_hash"),
         "html",
         "url",
         passthrough=("shard", "html_hash"),
-    )
+    ).select(*_STORED_SCHEMA.fieldNames())
 
 
 def run_extraction(

@@ -2,6 +2,8 @@
 on must be visible in `explain` output, not just intended.
 
 - column pruning: the extraction scan must read ONLY (url, html);
+- the extractor's Python stage returns the text once, as text_bytes,
+  and a pass writes no derived ``text``;
 - predicate pushdown: filters reach the parquet scan (PushedFilters);
 - broadcast joins: small dims broadcast;
 - partial aggregation: map-side combine before the shuffle;
@@ -71,6 +73,21 @@ def test_extract_scan_prunes_columns(spark, pages_path):
 def tree_of(df) -> str:
     """Indented operator tree, one node per line (child below parent)."""
     return df._jdf.queryExecution().executedPlan().treeString()
+
+
+def test_extractor_returns_text_once(spark, pages_path):
+    """The Python stage returns the extracted text once, as
+    ``text_bytes``: the ``MapInArrow`` node outputs no ``text``, which a
+    JVM projection above it derives. The pass's write keeps only the
+    stored columns, so the derivation is pruned out of it."""
+    pages = spark.read.parquet(pages_path)
+    (node,) = [ln for ln in tree_of(extract_main_content(pages)).splitlines() if "MapInArrow" in ln]
+    out = re.search(r"\)#\d+, \[([^\]]*)\]", node).group(1)
+    names = [a.split("#")[0] for a in out.split(", ")]
+    assert names == ["url", "title", "text_bytes", "spans", "n_events", "status"], node
+    stored = extract_shards(with_html_hash(with_shard(pages, 64)))
+    assert "text" not in stored.columns
+    assert "makeValid" not in tree_of(stored)
 
 
 def test_extraction_pass_plan_has_no_shuffle(spark, pages_path, tmp_path):
