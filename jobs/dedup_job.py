@@ -148,9 +148,9 @@ def _exact_drops(hashes, id_col: str):
     """Non-representative exact duplicates from the hash table."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    exact = hashes.groupBy("content_hash").agg(
-        F.min(id_col).alias("rep_doc_id"), F.count("*").alias("n_copies")
-    )
+    from sax_wasm_spark.operators.dedup import exact_dedup  # noqa: PLC0415
+
+    exact = exact_dedup(hashes, id_col)
     return (
         hashes.join(exact.where(F.col("n_copies") > 1), "content_hash")
         .where(F.col(id_col) != F.col("rep_doc_id"))

@@ -31,9 +31,8 @@ from __future__ import annotations
 
 import re
 
-from .collect import EventCollector
+from .collect import parse_events
 from .names import is_name_start_char
-from .saxkernel import SaxParser
 
 GL = [1] * 256
 for _b in range(0xC0, 0xE0):
@@ -1829,8 +1828,4 @@ def parse_doc_flat(data: bytes, events: int) -> list[tuple]:
     rows = parse_doc(data, events)
     if rows is not None:
         return rows
-    collector = EventCollector()
-    parser = SaxParser(events=events, handler=collector)
-    parser.write(data)
-    parser.end()
-    return collector.rows
+    return parse_events(data, events)

@@ -41,8 +41,7 @@ import ast
 import inspect
 
 from . import fastsax
-from .collect import FIELD_NAMES
-from .fastsax import parse_doc_flat
+from .collect import FIELD_NAMES, parse_events
 
 _HELPERS = ("_tuof", "_tu", "_skipws")
 _PURE_BUF_METHODS = frozenset({"count", "rfind"})
@@ -248,4 +247,4 @@ def parse_doc_flat_np(data: bytes, events: int) -> list[tuple]:
     rows = parse_doc_np(data, events)
     if rows is not None:
         return rows
-    return parse_doc_flat(data, events)
+    return parse_events(data, events)

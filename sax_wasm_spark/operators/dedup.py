@@ -2,7 +2,7 @@
 
 Tiers, each exposed as an oracle-checked query in plans/queries.py:
 
-- exact:      md5(content) groupBy                    (q15)
+- exact:      content_hashes groupBy (exact_dedup)    (q15)
 - minhash:    per-doc min-shingle-hash signature      (q16)
 - simhash:    16-bit majority-of-nibble-bits          (q17)
 - minhash+LSH pairs: k hash functions → bands →
@@ -36,6 +36,8 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .delta import snapshot_diff
 
 log = logging.getLogger(__name__)
 
@@ -134,11 +136,13 @@ def shingles(
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return (
-        df.select(id_col, F.md5(F.col(text_col)).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("rep_doc_id"), F.count("*").alias("n_copies"))
+def exact_dedup(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Exact-duplicate groups of a :func:`content_hashes` table:
+    (content_hash, rep_doc_id, n_copies), the smallest id of each
+    group as its representative. One groupBy over the 32-byte hash
+    projection; texts never shuffle."""
+    return hashes.groupBy("content_hash").agg(
+        F.min(id_col).alias("rep_doc_id"), F.count("*").alias("n_copies")
     )
 
 
@@ -288,27 +292,15 @@ def dedup_churn(
 ) -> tuple[DataFrame, DataFrame]:
     """Classify a refresh against the previous run's hash table:
     returns ``(churned_ids, unchanged_ids)`` — both subsets of the NEW
-    corpus. Unchanged requires the id unique in BOTH snapshots with
-    equal hashes (the same never-reuse-duplicates rule as
-    run_extraction_incremental / snapshot_diff); everything else in
-    the new corpus (added, changed, duplicated) is churned and gets
-    re-shingled. Ids only in the previous snapshot are deleted — they
-    appear in neither output, so their store rows and pairs simply
-    fail the unchanged semi-joins downstream. One join over two
-    hash-table projections; texts never shuffle."""
-    n = new_hashes.groupBy(id_col).agg(
-        F.count("*").alias("_n_new"), F.min("content_hash").alias("_h_new")
-    )
-    p = prev_hashes.groupBy(id_col).agg(
-        F.count("*").alias("_n_prev"), F.min("content_hash").alias("_h_prev")
-    )
-    j = n.join(p, id_col, "left")
-    unchanged = j.where(
-        (F.col("_n_new") == 1)
-        & (F.col("_n_prev") == 1)
-        & F.col("_h_new").eqNullSafe(F.col("_h_prev"))
-    ).select(id_col)
-    churned = j.join(unchanged, id_col, "left_anti").select(id_col)
+    corpus, split by ``operators/delta.snapshot_diff`` over
+    ``content_hash``. Unchanged docs keep their signatures and pairs;
+    churned ones (added or changed, which includes ids duplicated in
+    either snapshot) get re-shingled. Deleted ids appear in neither
+    output, so their store rows and pairs simply fail the unchanged
+    semi-joins downstream."""
+    diff = snapshot_diff(prev_hashes, new_hashes, id_col, hash_col="content_hash")
+    churned = diff.where(F.col("change").isin("added", "changed")).select(id_col)
+    unchanged = diff.where(F.col("change") == "unchanged").select(id_col)
     return churned, unchanged
 
 

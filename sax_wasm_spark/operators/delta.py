@@ -41,12 +41,15 @@ def snapshot_diff(
 
     Exactly ONE output row per key, even when a key is duplicated in
     either snapshot: each side pre-aggregates to (key, count, min
-    hash) before the join (the same guard run_extraction_incremental
-    applies), and a key duplicated on either side never classifies as
-    ``unchanged`` — per-row identity is ambiguous under duplication,
-    so it is ``changed`` (re-extract), matching the incremental
-    refresh's never-reuse-duplicates rule. The reported hash for a
-    duplicated key is the minimum across its rows.
+    hash) before the join, and a key duplicated on either side never
+    classifies as ``unchanged`` — per-row identity is ambiguous under
+    duplication, so it is ``changed`` (reprocess). The reported hash
+    for a duplicated key is the minimum across its rows.
+
+    This is the one implementation of the rule: the extraction refresh
+    (plans/lineage.run_extraction_incremental, over ``html_hash``) and
+    the incremental dedup (operators/dedup.dedup_churn, over
+    ``content_hash``) both classify through it.
 
     ``hash_col`` names an already-computed content-hash column on both
     inputs (e.g. the ``html_hash`` the extraction snapshot persists);

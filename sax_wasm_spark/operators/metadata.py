@@ -547,11 +547,11 @@ def _xml_elements(data: bytes):
     {attr: value}) per OpenTag — the kernel emits an element's
     Attribute events immediately before its OpenTag, so one pending
     dict pairs them exactly (the q61 ordering fact, in-process)."""
-    from ..kernel.collect import parse_events  # noqa: PLC0415
+    from ..kernel.fastsax import parse_doc_flat  # noqa: PLC0415
 
     pending: dict[str, str] = {}
     mask = (1 << _EV_ATTRIBUTE) | (1 << _EV_OPEN)
-    for row in parse_events(data, events=mask):
+    for row in parse_doc_flat(data, mask):
         code = row[0]
         if code == _EV_ATTRIBUTE:
             pending[row[4].decode("utf-8", "replace")] = row[5].decode(

@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from ..operators.delta import snapshot_diff
 from ..operators.extract import EXTRACT_SCHEMA, extract_main_content, text_of, with_text
 
 LINEAGE_SCHEMA = StructType(
@@ -405,25 +406,23 @@ def run_extraction_incremental(
     previous_path: str,
     num_shards: int = 64,
     run_id: str = "run",
-    table_format: str = "parquet",
 ) -> dict:
     """Refresh extraction against a PREVIOUS run's output: pages whose
     raw html hash matches their url's previous ``html_hash`` REUSE the
     previous extracted row verbatim (zero kernel runs — at a few
     percent churn this skips ~95% of the dominant stage); changed and
     added pages extract; urls absent from the new crawl are dropped
-    (counted as deleted). The classification is ONE url-keyed
-    projection join over (url, hash) — 32 bytes/row through the
-    shuffle, the same key the shards derive from. Edge rules:
+    (counted as deleted). The classification is
+    ``operators/delta.snapshot_diff`` over (url, html_hash), and only its
+    ``unchanged`` urls are reused: a url duplicated in either snapshot
+    re-extracts, which keeps the refreshed snapshot identical to a
+    from-scratch run. Edge rules of the inputs:
 
-    - previous outputs written before ``html_hash`` existed classify
-      as changed (safe, just not incremental for those rows);
+    - previous outputs written before ``html_hash`` existed read it as
+      NULL and classify as changed (safe, just not incremental for
+      those rows);
     - NULL html hashes as ``md5(b"")`` — exactly what the extractor
-      produces for it — so such pages classify like any other;
-    - urls duplicated in EITHER snapshot are never reused (always
-      re-extracted): per-row reuse under duplication is ambiguous, and
-      re-extracting keeps the refreshed snapshot identical to a
-      from-scratch run.
+      produces for it — so such pages classify like any other.
 
     Writes the combined snapshot to ``out_path`` as one pass and commits
     it for every shard below ``num_shards``. ``out_path`` must differ
@@ -448,28 +447,15 @@ def run_extraction_incremental(
             "deleted urls) — refresh into a fresh snapshot root"
         )
 
-    # a snapshot written before html_hash existed reads it as NULL, so
-    # all its rows classify as changed below (eqNullSafe never matches
-    # NULL against a real hash)
-    prev = read_extracted(spark, previous_path, table_format)
+    prev = read_extracted(spark, previous_path)
     hashed = with_html_hash(with_shard(pages, num_shards))
 
-    # per-url classification over the tiny (url, hash) projections:
-    # reuse requires the url unique in BOTH snapshots and hash-equal
-    prev_u = prev.groupBy("url").agg(
-        F.count("*").alias("_n_prev"), F.min("html_hash").alias("_prev_hash")
-    )
-    new_u = hashed.groupBy("url").agg(
-        F.count("*").alias("_n_new"), F.min("html_hash").alias("_new_hash")
-    )
-    cls = new_u.join(prev_u, "url", "full_outer").persist()
-    unchanged_urls = cls.where(
-        (F.col("_n_prev") == 1)
-        & (F.col("_n_new") == 1)
-        & F.col("_new_hash").eqNullSafe(F.col("_prev_hash"))
-    ).select("url")
-    n_reused = unchanged_urls.count()
-    n_deleted = cls.where(F.col("_n_new").isNull()).count()
+    # one row per url; the two counters come from one job over it
+    diff = snapshot_diff(prev, hashed, "url", hash_col="html_hash").persist()
+    counts = {r.change: r["count"] for r in diff.groupBy("change").count().collect()}
+    n_reused = counts.get("unchanged", 0)
+    n_deleted = counts.get("deleted", 0)
+    unchanged_urls = diff.where(F.col("change") == "unchanged").select("url")
 
     extracted_new = extract_shards(hashed.join(unchanged_urls, "url", "left_anti"))
     # the unchanged set is corpus-sized — a plain url-keyed semi-join,
@@ -485,10 +471,10 @@ def run_extraction_incremental(
         prev.join(unchanged_urls, "url", "left_semi").drop("shard"), num_shards
     ).select(*extracted_new.columns)
     combined = extracted_new.unionByName(reused)
-    pass_id = write_extracted_partitioned(combined, out_path, table_format)
-    cls.unpersist()
+    pass_id = write_extracted_partitioned(combined, out_path)
+    diff.unpersist()
 
-    written = _pass_output(spark, out_path, table_format, pass_id, frozenset())
+    written = _pass_output(spark, out_path, "parquet", pass_id, frozenset())
     rows = _append_lineage(
         spark, written, f"{out_path}/lineage", run_id, pass_id, range(num_shards)
     )

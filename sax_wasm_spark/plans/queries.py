@@ -514,14 +514,12 @@ def q14_sql():
 
 
 def q15_dedup_exact(spark, sf_dir):
-    """Exact dedup by content hash: representative id + duplicate count."""
+    """Exact dedup by content hash: representative id + duplicate count
+    (operators/dedup.exact_dedup, the grouping jobs/dedup_job runs)."""
+    from ..operators.dedup import content_hashes, exact_dedup  # noqa: PLC0415
+
     d = load(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", F.md5(F.col("text")).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(F.min("doc_id").alias("rep_doc_id"), F.count("*").alias("n_copies"))
-        .orderBy("rep_doc_id")
-    )
+    return exact_dedup(content_hashes(d)).orderBy("rep_doc_id")
 
 
 def q15_sql():

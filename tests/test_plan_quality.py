@@ -17,7 +17,9 @@ on must be visible in `explain` output, not just intended.
   listing), after a partial resume too;
 - resume set read once to the driver: a fully-done resume runs only
   the lineage read, on a sparse corpus too, and a partial resume's
-  lineage aggregate scans only the pass directory it wrote.
+  lineage aggregate scans only the pass directory it wrote;
+- a refresh classifies through one persisted ``snapshot_diff`` and
+  reads its counters in one job (its job count is pinned).
 """
 
 import os
@@ -175,6 +177,38 @@ def test_extraction_pass_job_counts(passes_64):
     assert fresh["processed_shards"] == 64
     assert done == {"processed_shards": 0, "skipped_shards": 64, "n_docs": 0}
     assert (n_fresh, n_done) == (4, 1)
+
+
+def test_refresh_job_count(spark, passes_64, tmp_path):
+    """A refresh of a committed 64-shard root classifies every url once,
+    through ``snapshot_diff``, and reads ``n_reused`` and ``n_deleted``
+    from one count per change class. Of the 400 pages, about a tenth
+    are dropped and about a tenth change; the rest reuse their rows."""
+    prev, _, _ = passes_64
+    pages = spark.read.parquet(os.path.join(os.path.dirname(prev), "pages"))
+    bucket = F.pmod(F.xxhash64("url"), F.lit(10))
+    new_pages = pages.where(bucket != 0).withColumn(
+        "html",
+        F.when(bucket == 1, F.concat("html", F.lit(b"<p>refresh delta</p>"))).otherwise(
+            F.col("html")
+        ),
+    )
+    n_deleted = pages.where(bucket == 0).count()
+    n_changed = pages.where(bucket == 1).count()
+    assert n_deleted and n_changed
+    out = str(tmp_path / "refresh")
+    stats, n = jobs_of(
+        spark,
+        "refresh",
+        lambda: lineage.run_extraction_incremental(spark, new_pages, out, prev, 64, "r3"),
+    )
+    assert stats == {
+        "n_reused": 400 - n_deleted - n_changed,
+        "n_extracted": n_changed,
+        "n_deleted": n_deleted,
+        "n_docs": 400 - n_deleted,
+    }
+    assert n == 15
 
 
 def test_read_extracted_starts_no_job(spark, passes_64, tmp_path):
